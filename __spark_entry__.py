@@ -9496,7 +9496,7 @@ def d_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-frequency on log-rank (healthy natural text sits near −1;
     template/boilerplate corpora flatten). The frequency table is
     vocabulary-sized, ranked by (count desc, token) for a total order
-    via the two-pass distributed row_number (operators/rank.py) — a
+    via the lazy distributed row_number (operators/rank.py) — a
     100 TB corpus has a ~10⁸-type vocabulary, too big for a one-task
     sort; both logs round to the 1e-6 quantum (transcendental-output
     rule) and the regression moments are decimal-exact sums — one-row
@@ -10227,7 +10227,7 @@ def e_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     is hist_var's integer rank rule; the share is one fixed-order IEEE
     division of exact operands. The per-user reduction shrinks events
     to |users| rows before any sort, and the rank itself is the
-    two-pass distributed row_number (operators/rank.py) — no
+    lazy distributed row_number (operators/rank.py) — no
     single-task global sort at any cardinality."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
         distributed_row_number,
@@ -10297,8 +10297,8 @@ def e_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies in BIGINT (Spark would silently wrap past 2^63 where
     DuckDB errors — the cross-engine divergence class); the final
     combination is fixed-order IEEE over exact operands. The rank is
-    the two-pass distributed row_number (operators/rank.py): range
-    partition → per-partition counts → offset join — no single-task
+    the lazy distributed row_number (operators/rank.py): range-sorted
+    rows numbered by Spark's distributed sequence id — no single-task
     global sort anywhere, even over |users| key rows."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
         distributed_row_number,
@@ -11447,9 +11447,12 @@ def d_quality_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Reciprocal Rank Fusion into one curation ordering. No score
     calibration across heterogeneous signals, only ranks (the same
     argument as hybrid retrieval). Every stage is distributed: each
-    ranking is the two-pass distributed row_number on a quantized
-    BIGINT key (never a raw float), and the fusion is the
-    nano-quantized integer RRF combine. Top-25 'cleanest' documents."""
+    ranking is the lazy distributed row_number (operators/rank.py: a
+    global range sort numbered by Spark's distributed sequence id, no
+    job at build time) on a quantized BIGINT key (never a raw float),
+    and the fusion is the nano-quantized integer RRF combine. The only
+    build-time jobs are the two checkpoints (the shared tokenize and
+    unigram_xent's per-doc table). Top-25 'cleanest' documents."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.corpus import (
         reciprocal_rank_fusion,
     )
@@ -12008,7 +12011,7 @@ def d_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay). Types are token BIGRAMS (the synthetic corpus has a ~31-word
     unigram vocabulary — bigrams give the curve a real tail; on a real
     corpus pass unigrams or BPE pieces through the same shape).
-    Frequencies rank by (count desc, gram) through the two-pass
+    Frequencies rank by (count desc, gram) through the lazy
     distributed row_number (operators/rank.py — a 100 TB corpus has a
     ~10⁸-type vocabulary, too big for a one-task sort), then ONE
     conditional aggregate computes every k simultaneously; no

@@ -16,6 +16,7 @@ from collections.abc import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, FloatType
 
 
 def grouped_fold(
@@ -41,11 +42,25 @@ def grouped_fold(
 
     ``fold`` may return any shape matching ``schema`` (fewer/more rows,
     different columns). Keys must be scalar, comparable values (NULL keys
-    are grouped together, as in grouped-map).
+    are grouped together, as in grouped-map). FLOAT/DOUBLE keys raise
+    ``ValueError``: NULL and NaN both arrive in pandas as NaN, so a
+    NULL-key group and a NaN-key group would merge; quantize or cast
+    such keys first.
     """
     import numpy as np
 
     key_list = list(keys)
+    float_keys = [
+        f.name
+        for f in src.schema.fields
+        if f.name in key_list and isinstance(f.dataType, (FloatType, DoubleType))
+    ]
+    if float_keys:
+        raise ValueError(
+            f"grouped_fold: key column(s) {float_keys} are FLOAT/DOUBLE; a "
+            "NULL-key group and a NaN-key group would merge at the Arrow "
+            "boundary. Quantize or cast the key first."
+        )
     n = num_partitions or src.sparkSession.sparkContext.defaultParallelism
     part = src.repartition(n, *key_list).sortWithinPartitions(*key_list)
 

@@ -1,27 +1,30 @@
-"""Distributed global rank — two-pass row_number without a single-task sort.
+"""Distributed global rank and running sum without a single-task sort.
 
 ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY collapses the
 whole input into ONE task (Spark plans a global Sort into a single
 partition for an ungrouped window).  That is fine for a handful of rows
-and a scale bug for anything sizeable.  This module provides the classic
-two-pass replacement:
+and a scale bug for anything sizeable.  This module has the distributed
+replacements.
 
-1. ``repartitionByRange`` on the sort key — Spark's RangePartitioner
-   gives ordered, non-overlapping key ranges across ``P`` partitions.
-2. Stamp each row with its range-partition id and pin the assignment
-   with ``localCheckpoint`` (both downstream branches must see the SAME
-   assignment; range sampling is not contractually deterministic across
-   recomputation).
-3. Count rows per partition — the only "global" data is one (pid, count)
-   row per partition (P ≈ shuffle partitions, never data-sized),
-   collected and prefix-summed driver-side.
-4. Inline the offsets as a literal pid->offset map and add a
-   PER-PARTITION ``row_number`` (``PARTITION BY pid`` — a keyed,
-   distributed window; no ungrouped WindowExec anywhere).
+* :func:`distributed_row_number` is a LAZY plan transformation.  It
+  sorts globally (a range exchange plus per-partition sorts, no single
+  partition anywhere) and attaches Spark's own distributed sequence id,
+  the operator behind pandas-on-Spark's default index.  The physical
+  ``AttachDistributedSequenceExec`` caches its sorted child, counts the
+  rows per partition, then numbers every row in partition order
+  (``zipWithIndex``) from the same cached rows, and unpersists them when
+  the query finishes.  Over a globally sorted child that index is the
+  global ``row_number``.  No job runs when the function is called.
+* :func:`distributed_running_sum` is the classic eager two-pass prefix
+  sum: range partition, pin the assignment, collect one total per
+  partition, inline the offsets.  Spark has no lazy primitive for a
+  cross-partition prefix sum, so this one stays an action.
+* :func:`packed_running_sum` is the lazy running sum for tables bounded
+  by construction.
 
-The result is bit-identical to the global ``row_number`` whenever the
-full sort key is a total order (callers append a unique tie-break column,
-as all in-repo callers do): global_rank = partition_offset + local_rank.
+The rank is bit-identical to the global ``row_number`` whenever the full
+sort key is a total order (callers append a unique tie-break column, as
+all in-repo callers do).
 
 Reference parity: the reference engine's ranked exports
 (`analytics/queries.py` top-N / ledger endpoints) use single-node sorts —
@@ -34,6 +37,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 
 __all__ = [
     "distributed_row_number",
@@ -53,75 +57,27 @@ def distributed_row_number(
     """Append ``rank_col`` = global row_number over ``order_by``, distributed.
 
     ``order_by`` must be a TOTAL order (include a unique tie-break column)
-    — with a total order the two-pass rank is exactly the ungrouped
+    — with a total order the rank is exactly the ungrouped
     ``row_number() OVER (ORDER BY ...)``, but no stage ever sorts more
     than one range partition in one task.
 
-    The input is localCheckpoint-ed (materialized once, lineage cut) so
-    the per-partition counts and the per-partition local ranks are
-    computed over the SAME range assignment.  Driver-side data: one
-    (pid, count) row per partition — bounded at ``num_partitions``,
-    never data-sized — folded into a literal pid->offset map.
-
-    **EAGER, not lazy** (round-9 ADVICE): calling this function runs
-    two Spark jobs immediately (the localCheckpoint materialization and
-    the P-row count collect) and pins the result to a snapshot of the
-    input as of the call.  Treat it as an action: build the input plan
-    fully first, and do not expect later mutations of the underlying
-    source to be reflected in the returned DataFrame.
+    Lazy: calling it runs no job.  The plan is a global sort
+    (``orderBy``, or ``repartitionByRange(num_partitions)`` plus
+    ``sortWithinPartitions`` when ``num_partitions`` is given) under an
+    ``AttachDistributedSequence`` node.  Under a total order the sorted
+    sequence does not depend on where the range bounds fall, so a branch
+    that recomputes the rank (a self-join, an unreused exchange) gets the
+    same ranks.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     order_by = list(order_by)
-
-    # Materialize the INPUT before the range exchange: the
-    # RangePartitioner's bounds-sampling job executes the child once and
-    # the shuffle map pass executes it again, so an expensive upstream
-    # pipeline ran TWICE per rank. Checkpointing first makes both passes
-    # read the materialized rows; the transient storage is the same
-    # narrow (keys, order-cols) table the checkpoint below already pins.
-    stamped = (
-        df.localCheckpoint()
-        .repartitionByRange(num_partitions, *order_by)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint()
-    )
-
-    # One count row per range partition — bounded at ``num_partitions``
-    # BY CONSTRUCTION, so the prefix sum is a driver-side fold over a
-    # P-row collect (same bounded-artifact class as the centroid
-    # tables), inlined back as a literal pid->offset map.  ``stamped``
-    # is already materialized by the localCheckpoint, so this triggers
-    # no recomputation; vs the previous unpartitioned-window + broadcast
-    # join it removes one Exchange AND the WindowExec "No Partition
-    # Defined" warning that fired 6x per ranked query (a
-    # forgot-partitionBy heuristic crying wolf on a 32-row table — a
-    # foldable partitionBy(lit) is optimizer-stripped, so the honest
-    # fix is to not plan a window at all).
-    counts = stamped.groupBy(_PID).agg(F.count(F.lit(1)).alias("_c")).collect()
-    acc = 0
-    off_pairs: list[Column] = []
-    for row in sorted(counts, key=lambda r: r[_PID]):
-        off_pairs += [F.lit(row[_PID]), F.lit(acc)]
-        acc += row["_c"]
-    # empty input -> no partitions -> every offset is 0 (an argless
-    # create_map() is map<void,void> and cannot be indexed)
-    off_map = (
-        F.create_map(*off_pairs)[F.col(_PID)]
-        if off_pairs
-        else F.lit(0)
-    )
-
-    local_w = Window.partitionBy(_PID).orderBy(*order_by)
-    ranked = stamped.withColumn(
-        rank_col,
-        (
-            F.coalesce(off_map, F.lit(0)).cast("long")
-            + F.row_number().over(local_w)
-        ).cast("long"),
-    ).drop(_PID)
-    return ranked
+    if num_partitions is None:
+        ordered = df.orderBy(*order_by)
+    else:
+        ordered = df.repartitionByRange(num_partitions, *order_by).sortWithinPartitions(
+            *order_by
+        )
+    seq = InternalFunction.distributed_sequence_id() + F.lit(1)
+    return ordered.select("*", seq.cast("long").alias(rank_col))
 
 
 def distributed_running_sum(
@@ -133,8 +89,7 @@ def distributed_running_sum(
     total_col: Optional[str] = None,
 ) -> DataFrame:
     """Append ``out_col`` = running BIGINT sum of ``value_col`` over the
-    total order ``order_by`` — the ``distributed_row_number`` machinery
-    applied to ``sum`` instead of ``row_number``.
+    total order ``order_by``, distributed.
 
     ``sum(v) OVER (ORDER BY ...)`` with no PARTITION BY is the same
     single-task scale bug as the ungrouped row_number (and fires the
@@ -147,10 +102,12 @@ def distributed_running_sum(
     total order (integer addition is associative; callers pass distinct
     keys or append a tie-break).
 
-    **EAGER, not lazy** (round-9 ADVICE): calling this function runs
-    two Spark jobs immediately (localCheckpoint + the P-row totals
-    collect) and snapshots the input as of the call — treat it as an
-    action, not a plan transformation."""
+    **EAGER, not lazy**: calling this function runs Spark jobs
+    immediately (the two localCheckpoints, the range sampling and the
+    P-row totals collect) and snapshots the input as of the call —
+    treat it as an action, not a plan transformation.  Unlike the rank,
+    which rides on Spark's ``AttachDistributedSequence`` operator, Spark
+    has no lazy primitive for a cross-partition prefix sum."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -217,8 +174,7 @@ def packed_running_sum(
     in-array fold, re-expand with ``explode``.
 
     The bounded-table counterpart of :func:`distributed_running_sum`
-    (which stays fully distributed but runs two eager jobs at call
-    time — round-9 ADVICE). Use THIS variant when the input is bounded
+    (which stays fully distributed but runs eager jobs at call time). Use THIS variant when the input is bounded
     by construction — an offset grid, a per-bucket summary, a
     distinct-value histogram of a range-bounded metric — i.e. at most
     ~10^4 rows at ANY data scale. The whole table passes through one

@@ -1,13 +1,10 @@
 """Scale smoke for operators/rank.distributed_row_number.
 
-Round-7 ran this ad hoc at 20M/100M rows; the 100M back-to-back repeat
-hit single-JVM GC pressure because the harness still HELD the first
-pass's localCheckpoint blocks while the second pass ranked (the r7
-VERDICT flagged it as a harness artifact). This script is the clean
-version: after each pass the result reference is dropped and collected
-so the ContextCleaner releases the checkpoint blocks before the next
-pass starts — on a real cluster the blocks spread across executors and
-the issue never exists.
+Ranks a synthetic (key, id) table a few times back to back in one
+session. The rank holds no blocks between queries: Spark's sequence
+operator caches its sorted input only while the query runs and
+unpersists it when the query ends, so every pass starts from the same
+storage state as the first.
 
 Usage: python scripts/scale_smoke_rank.py [n_rows] [n_keys] [passes]
 (defaults 100_000_000 / 10_000_000 / 2). Each pass is checksum-verified
@@ -16,7 +13,6 @@ Usage: python scripts/scale_smoke_rank.py [n_rows] [n_keys] [passes]
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
 import time
@@ -53,28 +49,6 @@ def main() -> None:
     base.count()  # materialize the input outside the timed region
     expect = n_rows * (n_rows + 1) // 2
 
-    def keep_ids() -> set[int]:
-        it = sc._jsc.sc().getPersistentRDDs().keysIterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next())
-        return ids
-
-    base_ids = keep_ids()
-
-    def drop_pass_blocks() -> None:
-        # blocking-unpersist every checkpoint the pass created (the rank
-        # operator checkpoints its range-stamped input internally) so the
-        # next pass starts with the blocks GONE, not queued on the async
-        # ContextCleaner — the r7 harness raced the cleaner and measured
-        # GC pressure instead of the operator.
-        jsc = sc._jsc.sc()
-        it = jsc.getPersistentRDDs().keysIterator()
-        while it.hasNext():
-            rid = it.next()
-            if rid not in base_ids:
-                jsc.getPersistentRDDs().apply(rid).unpersist(True)
-
     for p in range(passes):
         t0 = time.time()
         ranked = distributed_row_number(
@@ -89,11 +63,6 @@ def main() -> None:
             f"({n_rows} rows, {n_keys} keys, {n_rows / wall / 1e6:.2f} M rows/s)"
         )
         assert ok
-        # drop the pass's checkpoint blocks BEFORE the next pass ranks
-        # (the r7 harness kept them alive -> GC pressure on a single JVM)
-        del ranked
-        gc.collect()
-        drop_pass_blocks()
 
     spark.stop()
 

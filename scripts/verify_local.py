@@ -22,10 +22,14 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script belongs to: a copy of the tree verifies its
+#: own code, not whichever checkout happens to be importable
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -141,7 +145,7 @@ def main() -> int:
         try:
             sha = subprocess.run(
                 ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-                cwd="/root/repo",
+                cwd=REPO,
             ).stdout.strip()
             # dirty = any modification OTHER than the gate's own
             # artifacts (this ledger, the preflight log, the bench
@@ -152,7 +156,7 @@ def main() -> int:
             _own = ("SWEEP_HASHES.json", "PREFLIGHT.log", "PROGRESS.jsonl")
             status = subprocess.run(
                 ["git", "status", "--porcelain"], capture_output=True,
-                text=True, cwd="/root/repo",
+                text=True, cwd=REPO,
             ).stdout.splitlines()
             dirty = bool(
                 [
@@ -174,7 +178,7 @@ def main() -> int:
             "n_failures": len(failures),
             "queries": ledger,
         }
-        with open("/root/repo/SWEEP_HASHES.json", "w") as fh:
+        with open(REPO / "SWEEP_HASHES.json", "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=False)
             fh.write("\n")
         print(f"wrote SWEEP_HASHES.json ({len(ledger)} entries, tree {sha[:10]}"

@@ -147,3 +147,22 @@ def test_grouped_fold_matches_grouped_map_across_batch_boundaries(spark):
     sizes = {g: n for g, n in [("a", 20), ("b", 1), ("c", 13), (None, 5), ("d", 8)]}
     for k, _seq, _v, _c, n in got:
         assert n == sizes[k]
+
+
+def test_grouped_fold_rejects_float_keys(spark):
+    """A FLOAT/DOUBLE key would let a NULL-key group and a NaN-key group
+    merge (both reach pandas as NaN), so grouped_fold refuses it."""
+    import pytest
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
+        grouped_fold,
+    )
+
+    df = spark.createDataFrame(
+        [(None, 1), (float("nan"), 2), (1.5, 3)], "k double, v int"
+    )
+    for key_df in (df, df.withColumn("k", df["k"].cast("float"))):
+        with pytest.raises(ValueError, match="FLOAT/DOUBLE"):
+            grouped_fold(key_df, ["v", "k"], lambda pdf: pdf, "k double, v int")
+    # an integer key next to the float column is fine
+    assert grouped_fold(df, ["v"], lambda pdf: pdf, "k double, v int").count() == 3

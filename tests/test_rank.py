@@ -1,14 +1,19 @@
 """distributed_row_number — parity with the ungrouped global row_number.
 
-The two-pass rank (operators/rank.py) must be BIT-identical to
-``row_number() OVER (ORDER BY ...)`` for any total-order key, while never
-planning a single-task global sort over the data.
+The lazy rank (operators/rank.py) must be BIT-identical to
+``row_number() OVER (ORDER BY ...)`` for any total-order key, under any
+physical config, while never planning a single-task global sort over the
+data, never running a job when it is called and never leaving persisted
+blocks behind.
 """
 
 from __future__ import annotations
 
+import contextlib
 import random
+import uuid
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -72,25 +77,127 @@ def test_rank_empty_and_single(spark):
     ).first()["_rk"] == 1
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_distributed_rank_plan(plan: str) -> None:
+    # the rank is Spark's distributed sequence over a range-partitioned
+    # sort: no Window at all, and no exchange into a single partition
+    assert "AttachDistributedSequence" in plan, plan
+    assert "rangepartitioning" in plan, plan
+    assert "SinglePartition" not in plan, plan
+    assert "Window" not in plan, plan
+
+
 def test_rank_no_ungrouped_window(spark):
-    # The physical plan must not contain a Window over an EMPTY partition
-    # spec on the data path (the single-task shape this operator removes).
-    # Our windows are PARTITION BY pid (data) and the P-row offset window,
-    # whose input is the tiny counts aggregate, never the raw table.
+    # The physical plan must not contain the single-task shape this
+    # operator removes, with or without an explicit partition count.
     df = spark.range(10000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
+    for n in (8, None):
+        ranked = distributed_row_number(
+            df, [F.col("k").asc(), F.col("id").asc()], num_partitions=n
+        )
+        _assert_distributed_rank_plan(_executed_plan(ranked))
+
+
+def _wait_for_listeners(spark) -> None:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_rank_runs_no_job_when_called(spark):
+    """The rank is a plan transformation: building it (and planning it)
+    fires no Spark job; only an action on the result does."""
+    sc = spark.sparkContext
+    df = spark.range(5000).select(F.col("id"), (F.col("id") % 13).alias("k"))
+    group = f"rank-lazy-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "distributed_row_number laziness")
+    try:
+        for n in (None, 6):
+            ranked = distributed_row_number(
+                df, [F.col("k").desc(), F.col("id").asc()], num_partitions=n
+            )
+            _executed_plan(ranked)
+        _wait_for_listeners(spark)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        ranked.agg(F.sum("_rk")).collect()
+        _wait_for_listeners(spark)
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _persistent_rdd_ids(spark) -> set:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def test_rank_leaves_no_persisted_rdd(spark):
+    """The sequence operator caches its sorted child for the count and
+    index passes and unpersists it when the query ends; the returned
+    DataFrame pins nothing."""
+    before = _persistent_rdd_ids(spark)
+    df = spark.range(20000).select(F.col("id"), (F.col("id") % 97).alias("k"))
     ranked = distributed_row_number(
-        df, [F.col("k").asc(), F.col("id").asc()], num_partitions=8
+        df, [F.col("k").asc(), F.col("id").asc()], num_partitions=5
     )
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
-    # every Window node that sorts the stamped data must carry the pid
-    # partition key; the offsets window input is an Aggregate, not a scan
-    for line in plan.splitlines():
-        if "Window [" in line and "__dr_pid" not in line:
-            # the offsets prefix-sum window — verify it is partition-count
-            # sized by checking it references the count column only
-            assert "_c" in line or "__dr_off" in line, line
+    assert ranked.agg(F.sum("_rk")).first()[0] == 20000 * 20001 // 2
+    assert len(ranked.collect()) == 20000
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+#: ROADMAP's physical-config perturbations that apply to this operator
+_PERTURBATIONS = {
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "shuffle_1": {"spark.sql.shuffle.partitions": "1"},
+    "shuffle_37": {"spark.sql.shuffle.partitions": "37"},
+    "no_exchange_reuse": {"spark.sql.exchange.reuse": "false"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+
+
+@contextlib.contextmanager
+def _conf(spark, settings: dict):
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("perturb", sorted(_PERTURBATIONS))
+def test_rank_parity_under_physical_configs(spark, perturb):
+    """Bit-identical to the ungrouped row_number under each config, also
+    when one plan consumes the rank twice (a self-join: the second branch
+    is recomputed unless its exchange is reused)."""
+    rng = random.Random(23)
+    rows = [(i, rng.randint(0, 40)) for i in range(3000)]
+    df = spark.createDataFrame(rows, "id long, k long")
+    order = [F.col("k").desc(), F.col("id").asc()]
+    with _conf(spark, _PERTURBATIONS[perturb]):
+        want = dict(_global_ranked(df, order).select("id", "_rk").collect())
+        for n in (None, 7):
+            ranked = distributed_row_number(df, order, num_partitions=n)
+            a, b = ranked.alias("a"), ranked.alias("b")
+            twice = a.join(b, F.col("a.id") == F.col("b.id")).select(
+                F.col("a.id"), F.col("a._rk"), F.col("b._rk")
+            )
+            got = twice.collect()
+            assert len(got) == len(rows)
+            assert {r[0]: r[1] for r in got} == want
+            assert all(r[1] == r[2] for r in got)
 
 
 def test_running_sum_parity_random(spark):
@@ -134,22 +241,25 @@ def test_running_sum_empty(spark):
 
 
 def test_no_unpartitioned_window_in_plan(spark):
-    """The structural point of the two-pass helpers: the physical plan
+    """The structural point of the distributed helpers: the physical plan
     must contain no ungrouped WindowExec (the 'No Partition Defined'
-    shape that collapses data to one task)."""
+    shape that collapses data to one task) and no single-partition
+    exchange."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
         distributed_running_sum,
     )
 
+    # k is a permutation of id: a plain alias of spark.range's id would
+    # let the optimizer drop the sort (Range output is already ordered)
     df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+        (F.col("id") * 37 % 100).alias("k"), (F.col("id") % 7).alias("v")
     )
-    for out in (
-        distributed_row_number(df, [F.col("k").asc()], "_rk"),
-        distributed_running_sum(df, [F.col("k").asc()], "v", "_cs"),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        for line in plan.splitlines():
-            if "Window" in line:
-                # every WindowExec must carry a partition spec
-                assert "__dr_pid" in line, line
+    _assert_distributed_rank_plan(
+        _executed_plan(distributed_row_number(df, [F.col("k").asc()], "_rk"))
+    )
+    plan = _executed_plan(distributed_running_sum(df, [F.col("k").asc()], "v", "_cs"))
+    assert "SinglePartition" not in plan, plan
+    for line in plan.splitlines():
+        if "Window" in line:
+            # every WindowExec must carry a partition spec
+            assert "__dr_pid" in line, line

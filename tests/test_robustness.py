@@ -152,6 +152,58 @@ def test_schema_cache_invalidates_on_source_rewrite(spark, tmp_path):
     assert s2 == "struct<region_b:bigint,extra:bigint>"
 
 
+def test_schema_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A directory source's own inode keeps its size and mtime when a part
+    file inside it is rewritten in place; load_table must still re-infer
+    the new schema instead of serving the cached one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources import (
+        tables,
+    )
+
+    src = tmp_path / "region.parquet"
+    src.mkdir()
+    part = src / "part-00000.parquet"
+    pq.write_table(pa.table({"region_a": [1, 2, 3]}), part)
+    s1 = tables.load_table(spark, str(tmp_path), "region").schema.simpleString()
+    dir_st = os.stat(src)
+    pq.write_table(pa.table({"region_b": [1, 2, 3], "extra": [2, 4, 6]}), part)
+    # only the part file changed: pin the directory's own stamp
+    os.utime(src, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(src).st_size == dir_st.st_size
+    s2 = tables.load_table(spark, str(tmp_path), "region").schema.simpleString()
+    assert s1 == "struct<region_a:bigint>"
+    assert s2 == "struct<region_b:bigint,extra:bigint>"
+
+
+def test_verify_local_imports_its_own_checkout(tmp_path):
+    """scripts/verify_local.py puts its OWN checkout first on sys.path, so
+    a copy of the tree verifies the copy's code, not another checkout's."""
+    import importlib.util
+    import shutil
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    root = tmp_path.resolve()
+    (root / "scripts").mkdir()
+    script = root / "scripts" / "verify_local.py"
+    shutil.copy(repo / "scripts" / "verify_local.py", script)
+    spec = importlib.util.spec_from_file_location("verify_local_copy", script)
+    mod = importlib.util.module_from_spec(spec)
+    saved = list(sys.path)
+    try:
+        spec.loader.exec_module(mod)
+        assert sys.path[0] == str(root)
+    finally:
+        sys.path[:] = saved
+    assert mod.REPO == root
+
+
 def test_gemm_ann_paths_drop_null_vectors(spark):
     """The Arrow-GEMM forms of hyperplane_buckets and sq8_knn must treat
     NULL embedding rows exactly like their expression-form predecessors:
