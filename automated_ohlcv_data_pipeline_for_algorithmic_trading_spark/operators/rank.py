@@ -52,7 +52,6 @@ def distributed_row_number(
     df: DataFrame,
     order_by: Sequence[Column],
     rank_col: str = "_rk",
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """Append ``rank_col`` = global row_number over ``order_by``, distributed.
 
@@ -61,23 +60,15 @@ def distributed_row_number(
     ``row_number() OVER (ORDER BY ...)``, but no stage ever sorts more
     than one range partition in one task.
 
-    Lazy: calling it runs no job.  The plan is a global sort
-    (``orderBy``, or ``repartitionByRange(num_partitions)`` plus
-    ``sortWithinPartitions`` when ``num_partitions`` is given) under an
-    ``AttachDistributedSequence`` node.  Under a total order the sorted
-    sequence does not depend on where the range bounds fall, so a branch
-    that recomputes the rank (a self-join, an unreused exchange) gets the
-    same ranks.
+    Lazy: calling it runs no job.  The plan is a global sort (a range
+    exchange over ``spark.sql.shuffle.partitions``, which AQE may
+    coalesce) under an ``AttachDistributedSequence`` node.  Under a total
+    order the sorted sequence does not depend on where the range bounds
+    fall, so a branch that recomputes the rank (a self-join, an unreused
+    exchange) gets the same ranks.
     """
-    order_by = list(order_by)
-    if num_partitions is None:
-        ordered = df.orderBy(*order_by)
-    else:
-        ordered = df.repartitionByRange(num_partitions, *order_by).sortWithinPartitions(
-            *order_by
-        )
     seq = InternalFunction.distributed_sequence_id() + F.lit(1)
-    return ordered.select("*", seq.cast("long").alias(rank_col))
+    return df.orderBy(*order_by).select("*", seq.cast("long").alias(rank_col))
 
 
 def distributed_running_sum(

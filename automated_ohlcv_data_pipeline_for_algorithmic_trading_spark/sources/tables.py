@@ -44,23 +44,22 @@ NANOS_TS_COLS: dict[str, tuple[str, ...]] = {
 #: 100 TB). Without it every query invocation pays a footer-inference
 #: Spark job before any real work (~0.2 s/query locally, a driver-side
 #: listing + footer read at scale). Never caches rows or results; first
-#: access in a process still reads the footers. The source's stamp
-#: (:func:`_source_stamp`: the file's size and mtime, or those of every
-#: file under a directory source) is part of the key, so a table
-#: rewritten with a different schema mid-process re-infers instead of
-#: silently serving the stale schema.
+#: access in a process still reads the footers. The file's stamp
+#: (:func:`_source_stamp`: its size and mtime) is part of the key, so a
+#: table rewritten with a different schema mid-process re-infers instead
+#: of silently serving the stale schema.
 _SCHEMA_CACHE: dict = {}
 
 
-def _source_stamp(path: str) -> tuple:
-    """The cache-key stamp of a parquet source.
+def _source_stamp(path: str) -> tuple | None:
+    """The cache-key stamp of a parquet source, or None if it must not
+    be cached.
 
-    A file is stamped by its (size, mtime).  A directory is stamped by
-    the sorted (relative name, size, mtime) of every file under it: the
-    directory inode's own size and mtime do not change when a part file
-    is rewritten in place.  A path that cannot be stat-ed (a remote
-    source) gets ``()``, i.e. path-only keying under the
-    immutable-within-a-run contract.
+    A file is stamped by its (size, mtime).  A directory is not cached:
+    its inode's size and mtime do not change when a part file is
+    rewritten in place, so its schema is inferred on every load.  A path
+    that cannot be stat-ed (a remote source) gets ``()``, i.e. path-only
+    keying under the immutable-within-a-run contract.
     """
     import os
     import stat
@@ -69,31 +68,25 @@ def _source_stamp(path: str) -> tuple:
         st = os.stat(path)
     except OSError:
         return ()
-    if not stat.S_ISDIR(st.st_mode):
-        return (st.st_size, st.st_mtime_ns)
-    entries = []
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            fp = os.path.join(root, name)
-            try:
-                fst = os.stat(fp)
-            except OSError:
-                continue
-            entries.append((os.path.relpath(fp, path), fst.st_size, fst.st_mtime_ns))
-    return tuple(sorted(entries))
+    if stat.S_ISDIR(st.st_mode):
+        return None
+    return (st.st_size, st.st_mtime_ns)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ts_cols = NANOS_TS_COLS.get(name, ())
     if ts_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (sf_dir, name, _source_stamp(f"{sf_dir}/{name}.parquet"))
-    cached = _SCHEMA_CACHE.get(key)
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _source_stamp(path)
+    key = (sf_dir, name, stamp)
+    cached = None if stamp is None else _SCHEMA_CACHE.get(key)
     if cached is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _SCHEMA_CACHE[key] = df.schema
+        df = spark.read.parquet(path)
+        if stamp is not None:
+            _SCHEMA_CACHE[key] = df.schema
     else:
-        df = spark.read.schema(cached).parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.schema(cached).parquet(path)
     dtypes = dict(df.dtypes)
     for c in ts_cols:
         if c not in df.columns:

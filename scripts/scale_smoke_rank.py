@@ -33,6 +33,9 @@ def main() -> None:
     )
 
     spark = get_spark("rank-scale-smoke")
+    # a fixed 64-way range exchange, as a large input would get
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     sc = spark.sparkContext
     par = sc.defaultParallelism * 2
 
@@ -52,8 +55,7 @@ def main() -> None:
     for p in range(passes):
         t0 = time.time()
         ranked = distributed_row_number(
-            base, [F.col("k").asc(), F.col("id").asc()], rank_col="_rk",
-            num_partitions=64,
+            base, [F.col("k").asc(), F.col("id").asc()], rank_col="_rk"
         )
         got = ranked.agg(F.sum("_rk")).collect()[0][0]
         wall = time.time() - t0

@@ -22,6 +22,30 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank 
 )
 
 
+@contextlib.contextmanager
+def _conf(spark, settings: dict):
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _partitions(n: int) -> dict:
+    """Conf for an ``n``-way range exchange that AQE does not coalesce,
+    so small inputs still spread over several partitions."""
+    return {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+
+
 def _global_ranked(df, order_by):
     w = Window.orderBy(*order_by)
     return df.withColumn("_rk", F.row_number().over(w).cast("long"))
@@ -32,20 +56,20 @@ def test_rank_parity_random(spark):
     rows = [(i, rng.randint(0, 50), rng.random()) for i in range(2000)]
     df = spark.createDataFrame(rows, "id long, k long, v double")
     order = [F.col("k").desc(), F.col("id").asc()]
-    got = distributed_row_number(df, order, num_partitions=7).select(
-        "id", "_rk"
-    )
-    want = _global_ranked(df, order).select("id", "_rk")
-    assert got.join(want, "id").filter(
-        got["_rk"] != want["_rk"]
-    ).count() == 0  # noqa: E712 — full anti-parity check
-    # ranks are a permutation of 1..n
-    n = df.count()
-    assert got.agg(F.min("_rk"), F.max("_rk"), F.count("*")).first() == (
-        1,
-        n,
-        n,
-    )
+    with _conf(spark, _partitions(7)):
+        got = distributed_row_number(df, order).select("id", "_rk")
+        assert got.rdd.getNumPartitions() == 7
+        want = _global_ranked(df, order).select("id", "_rk")
+        assert got.join(want, "id").filter(
+            got["_rk"] != want["_rk"]
+        ).count() == 0  # noqa: E712 — full anti-parity check
+        # ranks are a permutation of 1..n
+        n = df.count()
+        assert got.agg(F.min("_rk"), F.max("_rk"), F.count("*")).first() == (
+            1,
+            n,
+            n,
+        )
 
 
 def test_rank_heavy_ties(spark):
@@ -54,27 +78,24 @@ def test_rank_heavy_ties(spark):
     rows = [(i, 0 if i % 10 else i) for i in range(1000)]
     df = spark.createDataFrame(rows, "id long, k long")
     order = [F.col("k").asc(), F.col("id").asc()]
-    got = distributed_row_number(df, order, num_partitions=5)
-    want = _global_ranked(df, order)
-    mismatches = (
-        got.select("id", F.col("_rk").alias("g"))
-        .join(want.select("id", F.col("_rk").alias("w")), "id")
-        .filter(F.col("g") != F.col("w"))
-        .count()
-    )
+    with _conf(spark, _partitions(5)):
+        got = distributed_row_number(df, order)
+        want = _global_ranked(df, order)
+        mismatches = (
+            got.select("id", F.col("_rk").alias("g"))
+            .join(want.select("id", F.col("_rk").alias("w")), "id")
+            .filter(F.col("g") != F.col("w"))
+            .count()
+        )
     assert mismatches == 0
 
 
 def test_rank_empty_and_single(spark):
     empty = spark.createDataFrame([], "id long, k long")
-    assert (
-        distributed_row_number(empty, [F.col("k")], num_partitions=4).count()
-        == 0
-    )
     one = spark.createDataFrame([(1, 9)], "id long, k long")
-    assert distributed_row_number(
-        one, [F.col("k")], num_partitions=4
-    ).first()["_rk"] == 1
+    with _conf(spark, _partitions(4)):
+        assert distributed_row_number(empty, [F.col("k")]).count() == 0
+        assert distributed_row_number(one, [F.col("k")]).first()["_rk"] == 1
 
 
 def _executed_plan(df) -> str:
@@ -92,15 +113,12 @@ def _assert_distributed_rank_plan(plan: str) -> None:
 
 def test_rank_no_ungrouped_window(spark):
     # The physical plan must not contain the single-task shape this
-    # operator removes, with or without an explicit partition count.
+    # operator removes.
     df = spark.range(10000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
-    for n in (8, None):
-        ranked = distributed_row_number(
-            df, [F.col("k").asc(), F.col("id").asc()], num_partitions=n
-        )
-        _assert_distributed_rank_plan(_executed_plan(ranked))
+    ranked = distributed_row_number(df, [F.col("k").asc(), F.col("id").asc()])
+    _assert_distributed_rank_plan(_executed_plan(ranked))
 
 
 def _wait_for_listeners(spark) -> None:
@@ -115,11 +133,8 @@ def test_rank_runs_no_job_when_called(spark):
     group = f"rank-lazy-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "distributed_row_number laziness")
     try:
-        for n in (None, 6):
-            ranked = distributed_row_number(
-                df, [F.col("k").desc(), F.col("id").asc()], num_partitions=n
-            )
-            _executed_plan(ranked)
+        ranked = distributed_row_number(df, [F.col("k").desc(), F.col("id").asc()])
+        _executed_plan(ranked)
         _wait_for_listeners(spark)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         ranked.agg(F.sum("_rk")).collect()
@@ -144,11 +159,10 @@ def test_rank_leaves_no_persisted_rdd(spark):
     DataFrame pins nothing."""
     before = _persistent_rdd_ids(spark)
     df = spark.range(20000).select(F.col("id"), (F.col("id") % 97).alias("k"))
-    ranked = distributed_row_number(
-        df, [F.col("k").asc(), F.col("id").asc()], num_partitions=5
-    )
-    assert ranked.agg(F.sum("_rk")).first()[0] == 20000 * 20001 // 2
-    assert len(ranked.collect()) == 20000
+    with _conf(spark, _partitions(5)):
+        ranked = distributed_row_number(df, [F.col("k").asc(), F.col("id").asc()])
+        assert ranked.agg(F.sum("_rk")).first()[0] == 20000 * 20001 // 2
+        assert len(ranked.collect()) == 20000
     assert _persistent_rdd_ids(spark) - before == set()
 
 
@@ -157,24 +171,10 @@ _PERTURBATIONS = {
     "aqe_off": {"spark.sql.adaptive.enabled": "false"},
     "shuffle_1": {"spark.sql.shuffle.partitions": "1"},
     "shuffle_37": {"spark.sql.shuffle.partitions": "37"},
+    "shuffle_37_uncoalesced": _partitions(37),
     "no_exchange_reuse": {"spark.sql.exchange.reuse": "false"},
     "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
 }
-
-
-@contextlib.contextmanager
-def _conf(spark, settings: dict):
-    old = {k: spark.conf.get(k, None) for k in settings}
-    try:
-        for k, v in settings.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("perturb", sorted(_PERTURBATIONS))
@@ -188,16 +188,15 @@ def test_rank_parity_under_physical_configs(spark, perturb):
     order = [F.col("k").desc(), F.col("id").asc()]
     with _conf(spark, _PERTURBATIONS[perturb]):
         want = dict(_global_ranked(df, order).select("id", "_rk").collect())
-        for n in (None, 7):
-            ranked = distributed_row_number(df, order, num_partitions=n)
-            a, b = ranked.alias("a"), ranked.alias("b")
-            twice = a.join(b, F.col("a.id") == F.col("b.id")).select(
-                F.col("a.id"), F.col("a._rk"), F.col("b._rk")
-            )
-            got = twice.collect()
-            assert len(got) == len(rows)
-            assert {r[0]: r[1] for r in got} == want
-            assert all(r[1] == r[2] for r in got)
+        ranked = distributed_row_number(df, order)
+        a, b = ranked.alias("a"), ranked.alias("b")
+        twice = a.join(b, F.col("a.id") == F.col("b.id")).select(
+            F.col("a.id"), F.col("a._rk"), F.col("b._rk")
+        )
+        got = twice.collect()
+        assert len(got) == len(rows)
+        assert {r[0]: r[1] for r in got} == want
+        assert all(r[1] == r[2] for r in got)
 
 
 def test_running_sum_parity_random(spark):
