@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.candles import coalesce_aliases
+from .etl import partitioned_writer
 
 ALIASES = {
     "symbol": ("symbol", "s", "ticker"),
@@ -60,5 +61,6 @@ def normalize_close_only(df: DataFrame) -> DataFrame:
 
 def write_close_only(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Per-security partitioned parquet (etl/python_etl_job.py:82-95
-    groups by security before writing; partitionBy does that for free)."""
-    df.write.mode(mode).partitionBy("symbol", "year", "month", "day").parquet(path)
+    groups by security before writing; partitionBy does that for free).
+    A re-run replaces only the symbol-days it writes."""
+    partitioned_writer(df, path, mode, "symbol", "year", "month", "day").parquet(path)

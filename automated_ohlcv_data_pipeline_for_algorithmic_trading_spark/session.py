@@ -1,11 +1,15 @@
 """SparkSession factory and tuning.
 
 Scale notes (100 TB design): every conf here is cluster-safe. AQE handles
-runtime partition coalescing and skew-join splitting; dynamic partition
-overwrite gives idempotent day-partition rewrites (the reference's
-"can be run multiple times safely" contract, README.md:113); UTC session
+runtime partition coalescing and skew-join splitting; UTC session
 timezone pins epoch<->timestamp semantics (the reference's naive
 ``datetime.fromtimestamp`` is a documented parity trap, SURVEY.md SS7.2).
+Partition overwrite stays at Spark's static default: a write that
+replaces partitions of existing data (the reference's "can be run
+multiple times safely" contract, README.md:113) asks for dynamic
+overwrite as a writer option (``plans.etl.partitioned_writer``, the
+streaming upsert sink, ``plans.merge``, ``plans.rollup_refresh``), so a
+fresh destination commits without the dynamic staging directory.
 """
 
 from __future__ import annotations
@@ -20,7 +24,6 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }

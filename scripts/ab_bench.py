@@ -14,6 +14,10 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+#: the checkout this script belongs to (the B side of the A/B)
+REPO = Path(__file__).resolve().parents[1]
 
 SUSPECTS = [
     "d_bpe_learn",
@@ -121,7 +125,7 @@ def main() -> None:
     for i in range(2):  # interleave: A B A B
         a = run_variant(r4_root, names)
         print(f"pass{i} r4  : {json.dumps(a)}", flush=True)
-        b = run_variant("/root/repo", names)
+        b = run_variant(str(REPO), names)
         print(f"pass{i} head: {json.dumps(b)}", flush=True)
         rounds.append((a, b))
     print(f"\n{'query':28s} {'r4-best':>8s} {'head-best':>9s} {'ratio':>6s}")

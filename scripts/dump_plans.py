@@ -12,11 +12,13 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+os.chdir(REPO)
 
-OUT_DIR = os.environ.get("PLANS_DIR", "/root/repo/plans/r13")
+OUT_DIR = os.environ.get("PLANS_DIR", str(REPO / "plans" / "r13"))
 
 
 def main() -> int:

@@ -19,8 +19,10 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 # Machine-readable BNLJ allowlist: every BroadcastNestedLoopJoin site in
 # the plan corpus must belong to a query listed here, with the reason
@@ -148,7 +150,7 @@ def _header(census: dict[str, int]) -> str:
 
 
 def audit_committed() -> None:
-    txt = open("/root/repo/EXPLAINS.md").read()
+    txt = open(REPO / "EXPLAINS.md").read()
     census = _census_from_text(txt)
     errors = _audit(census, strict_missing=False)
     if errors:
@@ -215,7 +217,7 @@ def main() -> None:
     ]
     for name in headline:
         out.append(f"\n## {name}\n\n```\n{plans[name]}\n```\n")
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(REPO / "EXPLAINS.md", "w") as f:
         f.write("".join(out))
     print(
         f"wrote EXPLAINS.md ({len(headline)} plans, {len(registry)}"

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -379,14 +381,14 @@ def main() -> None:
     # preserve sections other scripts appended (e.g. the corpus smoke)
     tail = ""
     try:
-        with open("/root/repo/SCALE_RESULTS.md") as f:
+        with open(REPO / "SCALE_RESULTS.md") as f:
             prev = f.read()
         marker = "\n## Corpus scale smoke"
         if marker in prev:
             tail = prev[prev.index(marker):]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALE_RESULTS.md", "w") as f:
+    with open(REPO / "SCALE_RESULTS.md", "w") as f:
         f.write("".join(lines) + tail)
     print("wrote SCALE_RESULTS.md")
 

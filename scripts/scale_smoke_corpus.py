@@ -26,8 +26,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -255,7 +257,7 @@ def main() -> None:
     ]
     for label, dt, n, out_rows in results:
         lines.append(f"| {label} | {dt:.2f} | {n / dt:,.0f} | {out_rows:,} |\n")
-    with open("/root/repo/SCALE_RESULTS.md", "a") as f:
+    with open(REPO / "SCALE_RESULTS.md", "a") as f:
         f.write("".join(lines))
     print("appended to SCALE_RESULTS.md", flush=True)
 

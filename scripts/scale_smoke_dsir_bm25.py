@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -68,7 +70,7 @@ def main() -> None:
         docs.unpersist()
     spark.stop()
 
-    with open("/root/repo/SCALE_RESULTS.md", "a") as f:
+    with open(REPO / "SCALE_RESULTS.md", "a") as f:
         f.write(
             f"\n## DSIR / BM25 at {n_docs:,} docs (scale_smoke_dsir_bm25.py)\n\n"
             "| operator (variant) | wall s | docs/s | out rows |\n|---|---|---|---|\n"

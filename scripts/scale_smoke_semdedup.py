@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -85,7 +87,7 @@ def main() -> None:
     ]
     for label, dt in results:
         lines.append(f"| {label} | {dt:.2f} |\n")
-    with open("/root/repo/SCALE_RESULTS.md", "a") as f:
+    with open(REPO / "SCALE_RESULTS.md", "a") as f:
         f.writelines(lines)
     print("appended to SCALE_RESULTS.md", flush=True)
 
