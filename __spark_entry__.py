@@ -13742,11 +13742,7 @@ def _run_freshness_pipeline(
         # is handed the landed raw files and ends when the refreshed
         # rollup is materialized from the PHYSICAL silver table
         t0 = _time.perf_counter()
-        # 4 state partitions: one-shot availableNow replay at fixture
-        # volume — every stateful micro-batch pays #partitions x
-        # (state-store commit + checkpoint sync) regardless of rows, so
-        # narrow fixed width wins (see session.stateful_partitions)
-        with stateful_partitions(spark, 4), _scratch_ckpt() as ckpt:
+        with stateful_partitions(spark), _scratch_ckpt() as ckpt:
             q = upsert_silver_sink(
                 streaming_silver(
                     read_raw_stream(

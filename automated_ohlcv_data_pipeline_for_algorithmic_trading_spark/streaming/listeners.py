@@ -43,13 +43,22 @@ class RunNotificationListener(StreamingQueryListener):
         self._emit("query_started", {"id": str(event.id), "name": event.name})
 
     def onQueryProgress(self, event) -> None:
+        """One payload per micro-batch: its phase durations (``durationMs``:
+        queryPlanning, addBatch, walCommit, commitOffsets,
+        triggerExecution, ...) and its state operators summed."""
         p = event.progress
+        ops = p.stateOperators
         self._emit(
             "query_progress",
             {
                 "id": str(p.id),
                 "batch_id": p.batchId,
                 "num_input_rows": p.numInputRows,
+                "duration_ms": dict(p.durationMs),
+                "state_commit_ms": sum(s.commitTimeMs for s in ops),
+                "state_rows": sum(s.numRowsTotal for s in ops),
+                "state_memory_bytes": sum(s.memoryUsedBytes for s in ops),
+                "state_partitions": sum(s.numShufflePartitions for s in ops),
             },
         )
 

@@ -8,8 +8,11 @@ store-backed, exactly-once under checkpointing).
 
 Scale notes: state is one tiny tuple per symbol (KB total for any
 realistic universe); the state store shuffles on the group key once and
-partitions persist across batches, so throughput is bounded by the Arrow
-transfer of each batch, not state size.
+partitions persist across batches. At poll-set volume a batch's cost is
+set by the state-store width, not by the Arrow transfer or the state
+size: every partition runs a task and a versioned delta-file commit
+whatever it holds, so ``session.stateful_partitions`` keeps the width to
+one task wave.
 """
 
 from __future__ import annotations

@@ -35,8 +35,8 @@ else:
         if p90 > 1.4:
             print(
                 f"WARNING: p90 ratio {p90} exceeds the 1.4 drift ceiling —"
-                " A/B the movers in-sitting (scripts/ab_bench.py) before"
-                " closing the round"
+                " A/B the movers with alternating parent/change pairs of"
+                " perfbench/run.py before closing the round"
             )
 EOF
 

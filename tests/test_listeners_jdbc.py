@@ -41,6 +41,55 @@ def test_run_notification_listener(spark, tmp_path):
     assert published  # the injected publisher actually fired
 
 
+def test_listener_reports_batch_breakdown(spark, tmp_path):
+    """Each query_progress payload carries the batch's phase durations
+    and its state operators summed: commit time, rows, memory and the
+    state-store width."""
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.streaming.listeners import (
+        RunNotificationListener,
+    )
+
+    src = tmp_path / "src"
+    spark.range(50).selectExpr("id % 5 AS k").write.json(str(src))
+    listener = RunNotificationListener(lambda topic, p: None)
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            spark.readStream.schema("k long")
+            .json(str(src))
+            .groupBy("k")
+            .count()
+            .writeStream.format("noop")
+            .outputMode("complete")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        deadline = time.time() + 15
+        while time.time() < deadline and "query_terminated" not in [
+            e["topic"] for e in listener.events
+        ]:
+            time.sleep(0.5)
+    finally:
+        spark.streams.removeListener(listener)
+    [batch] = [
+        e
+        for e in listener.events
+        if e["topic"] == "query_progress" and e["num_input_rows"] > 0
+    ]
+    assert {
+        "queryPlanning", "addBatch", "walCommit", "commitOffsets",
+        "triggerExecution",
+    } <= set(batch["duration_ms"])
+    assert batch["state_rows"] == 5
+    assert batch["state_commit_ms"] >= 0
+    assert batch["state_memory_bytes"] > 0
+    assert batch["state_partitions"] == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
 def test_jdbc_writer_configured_not_executed(spark):
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.jdbc import (
         jdbc_writer,

@@ -204,6 +204,54 @@ def test_verify_local_imports_its_own_checkout(tmp_path):
     assert mod.REPO == root
 
 
+_CWD_PROBE = """
+import sys
+sys.path.insert(0, {repo!r})
+from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark import get_spark
+
+
+def fold(pdf):
+    # the worker imports the package, as every package-level fold does
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.functions import exact
+
+    return pdf.assign(n=len(pdf))
+
+
+spark = get_spark(
+    "cwd-probe", master="local[1]", shuffle_partitions=1,
+    extra={{"spark.driver.memory": "1g"}},
+)
+df = spark.createDataFrame([(1, 1.0), (1, 2.0), (2, 3.0)], "k long, v double")
+rows = df.groupBy("k").applyInPandas(fold, "k long, v double, n long").collect()
+print("RESULT", sorted((r.k, r.n) for r in rows))
+spark.stop()
+"""
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A driver started from an unrelated cwd, with the repo on its
+    sys.path only, must still run a pandas UDF whose worker imports the
+    package: get_spark puts the package's parent on the workers'
+    PYTHONPATH."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _CWD_PROBE.format(repo=str(repo))],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "RESULT [(1, 2), (1, 2), (2, 1)]" in proc.stdout, proc.stdout
+
+
 def test_gemm_ann_paths_drop_null_vectors(spark):
     """The Arrow-GEMM forms of hyperplane_buckets and sq8_knn must treat
     NULL embedding rows exactly like their expression-form predecessors:

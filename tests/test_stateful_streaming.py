@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
@@ -191,3 +192,109 @@ def test_stateful_fold_state_is_key_bounded(spark, tmp_path):
     # fold compacts, it never accumulates rows
     assert state_rows[0] == n_syms, state_rows
     assert set(state_rows) == {n_syms}, state_rows
+
+
+def _vwap_to_parquet(spark, raw, ckpt, out):
+    """Run the running-VWAP fold over ``raw`` (availableNow, one file per
+    batch) into a parquet file sink; return the finished query."""
+    stream = (
+        spark.readStream.schema(RAW_ENVELOPE_SCHEMA)
+        .option("multiLine", "true")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(raw))
+    )
+    q = (
+        streaming_vwap(bronze_to_silver(stream, dedup=None))
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(ckpt))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return q
+
+
+def _state_widths(q) -> set[int]:
+    return {
+        p["stateOperators"][0]["numShufflePartitions"]
+        for p in q.recentProgress
+        if p.get("stateOperators")
+    }
+
+
+def test_stateful_partitions_rule(spark, tmp_path):
+    """Default width is min(task slots, 8), an explicit n wins, the
+    previous value comes back on normal exit and on error, and a stateful
+    query started inside the context fits in one task wave."""
+    import os
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark import (
+        stateful_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(key)
+    with stateful_partitions(spark):
+        assert spark.conf.get(key) == str(min(slots, 8))
+    assert spark.conf.get(key) == before
+    with stateful_partitions(spark, 3):
+        assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before
+    with pytest.raises(RuntimeError), stateful_partitions(spark):
+        raise RuntimeError("body failed")
+    assert spark.conf.get(key) == before
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    f = raw / "a.json"
+    f.write_text(json.dumps(_envelope(BATCH1)))
+    os.utime(f, (1_600_000_000, 1_600_000_000))
+    with stateful_partitions(spark):
+        q = _vwap_to_parquet(spark, raw, tmp_path / "ckpt", tmp_path / "out")
+    widths = _state_widths(q)
+    assert widths and max(widths) <= slots, (widths, slots)
+
+
+def test_durable_checkpoint_keeps_its_state_width(spark, tmp_path):
+    """A checkpoint started at width 3 stays at 3 when the query restarts
+    under the default rule (Spark reads the width from the offset-log
+    metadata), and the restarted output equals a one-shot run over the
+    same files, which does take the default width."""
+    import os
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark import (
+        stateful_partitions,
+    )
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    f1, f2 = raw / "a_batch1.json", raw / "b_batch2.json"
+    f1.write_text(json.dumps(_envelope(BATCH1)))
+    os.utime(f1, (1_600_000_000, 1_600_000_000))
+    ckpt, out = tmp_path / "ckpt", tmp_path / "out"
+
+    with stateful_partitions(spark, 3):
+        first = _vwap_to_parquet(spark, raw, ckpt, out)
+    assert _state_widths(first) == {3}
+
+    f2.write_text(json.dumps(_envelope(BATCH2)))
+    os.utime(f2, (1_600_000_060, 1_600_000_060))
+    with stateful_partitions(spark):
+        restarted = _vwap_to_parquet(spark, raw, ckpt, out)
+        one_shot = _vwap_to_parquet(
+            spark, raw, tmp_path / "ckpt_once", tmp_path / "out_once"
+        )
+    assert [p["numInputRows"] for p in restarted.recentProgress] == [1]
+    assert _state_widths(restarted) == {3}
+    default = min(spark.sparkContext.defaultParallelism, 8)
+    assert _state_widths(one_shot) == {default}
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(str(path)).collect())
+
+    got = rows(out)
+    assert len(got) == 3
+    assert got == rows(tmp_path / "out_once")
