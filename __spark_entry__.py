@@ -1843,9 +1843,6 @@ def x_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    # explicit hash partitioning on the group key: AQE would coalesce the
-    # small shuffle to ~2 partitions and serialize the 150 pandas groups
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
     out = apply_per_symbol(
         src,
         bollinger_bands_exact(window=20, num_std=2.0),
@@ -1904,8 +1901,6 @@ def x_ema_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    # explicit hash partitioning on the group key (see x_bollinger_bands)
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
     out = apply_per_symbol(
         src,
         ema_macd_exact(fast=12, slow=26),
@@ -10607,7 +10602,6 @@ def x_ppo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts")).alias("timestamp_unix"),
         F.col("value").alias("close"),
     )
-    src = src.repartition(spark.sparkContext.defaultParallelism, "user_id")
     out = apply_per_symbol(
         src,
         ema_macd_exact(fast=12, slow=26),

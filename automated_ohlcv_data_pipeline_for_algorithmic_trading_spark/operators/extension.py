@@ -12,10 +12,13 @@ across instruments — one shuffle on the group key, Arrow both ways.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
 
@@ -24,7 +27,7 @@ def grouped_fold(
     keys: Sequence[str],
     fold: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    num_partitions: int | None = None,
+    order_by: Sequence[str] = (),
 ) -> DataFrame:
     """Run a per-group pandas ``fold`` via ``mapInPandas`` over
     key-contiguous partitions — the amortized replacement for
@@ -35,10 +38,28 @@ def grouped_fold(
     Same exchange as the grouped-map form (hash on ``keys``), plus a
     partition-local sort on ``keys`` so each group's rows are contiguous;
     ``fold`` receives one whole group at a time with a fresh RangeIndex —
-    byte-identical input to what ``applyInPandas`` delivers (within-group
-    row order is unspecified in both forms; every in-repo fold sorts by
-    its order column first). Groups that span Arrow batch boundaries are
-    carried over, so the 10k-row default batch size never splits a group.
+    byte-identical input to what ``applyInPandas`` delivers. Groups that
+    span Arrow batch boundaries are carried over, so the 10k-row default
+    batch size never splits a group.
+
+    Row order: with ``order_by`` the same JVM sort also orders each
+    group by those columns, ascending with NULLs last (the
+    ``na_position='last'`` default of the pandas sort it replaces), so a
+    recurrence fold needs no ``sort_values`` of its own. Rows that tie on
+    (keys, order_by) arrive in unspecified order, as under pandas'
+    default quicksort; every in-repo caller orders by a per-key unique
+    column. Without ``order_by`` within-group order is unspecified, as
+    in the grouped-map form.
+
+    Partitioning: the exchange is an explicit ``repartition(n, *keys)``
+    with n = ``defaultParallelism``, not the planner-inserted one, so
+    AQE cannot byte-coalesce the (small) pre-fold shuffle to ONE
+    partition and serialize every group's Arrow round-trip into a single
+    task (measured 7.4 s → sub-second for 150 groups at bench scale).
+    Callers therefore never repartition first: Catalyst's
+    CollapseRepartition would drop theirs anyway. (An input already
+    hash-partitioned on ``keys`` can still lose this exchange — see the
+    parallelism trap in ``finance.ema_fold``.)
 
     ``fold`` may return any shape matching ``schema`` (fewer/more rows,
     different columns). Keys must be scalar, comparable values (NULL keys
@@ -47,8 +68,6 @@ def grouped_fold(
     NULL-key group and a NaN-key group would merge; quantize or cast
     such keys first.
     """
-    import numpy as np
-
     key_list = list(keys)
     float_keys = [
         f.name
@@ -61,8 +80,10 @@ def grouped_fold(
             "NULL-key group and a NaN-key group would merge at the Arrow "
             "boundary. Quantize or cast the key first."
         )
-    n = num_partitions or src.sparkSession.sparkContext.defaultParallelism
-    part = src.repartition(n, *key_list).sortWithinPartitions(*key_list)
+    n = src.sparkSession.sparkContext.defaultParallelism
+    part = src.repartition(n, *key_list).sortWithinPartitions(
+        *key_list, *[F.col(c).asc_nulls_last() for c in order_by]
+    )
 
     def _assemble(frames):
         out = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
@@ -117,6 +138,35 @@ def grouped_fold(
     return part.mapInPandas(run, schema=schema)
 
 
+def ema_chain(values: np.ndarray, ns: Sequence[int]) -> list[np.ndarray]:
+    """The exact integer EMA kernel shared by every chained-EMA indicator:
+    stage k folds stage k−1's states (stage 1 folds ``values``) with
+
+        e_0 = x_0 ;  e_i = e_{i−1} + floor(2.0·(x_i − e_{i−1}) / (n_k + 1.0))
+
+    so every stage seeds at the first value of its own input. The floor
+    is over the DOUBLE quotient; while all operands stay below 2^53 both
+    this fold and a recursive SQL CTE compute the identical double and
+    the identical integer state. Returns one int64 array of states per
+    entry of ``ns``.
+    """
+    out = []
+    xs = values.tolist()
+    for n in ns:
+        # plain-list recurrence (numpy scalar indexing is ~5x slower in
+        # sequential folds — see the hot-key smoke in SCALE_RESULTS.md);
+        # the step at x_0 is floor(0.0) = 0, which leaves the seed as is
+        d = n + 1.0
+        e = xs[0] if xs else 0
+        states = []
+        for x in xs:
+            e += math.floor(2.0 * (x - e) / d)
+            states.append(e)
+        out.append(np.asarray(states, dtype=np.int64))
+        xs = states
+    return out
+
+
 def apply_per_symbol(
     df: DataFrame,
     fn: Callable[[pd.DataFrame], pd.DataFrame],
@@ -125,22 +175,17 @@ def apply_per_symbol(
     ts_col: str | Sequence[str] | None = "timestamp_iso",
 ) -> DataFrame:
     """Run ``fn`` once per key group as a pandas DataFrame (sorted by
-    ``ts_col`` when given — indicator code can assume chronological
-    order). ``output_schema`` is the full output schema DDL string.
+    ``ts_col`` when given, NULLs last — indicator code can assume
+    chronological order; see :func:`grouped_fold`). ``output_schema`` is
+    the full output schema DDL string.
 
     Scale: groups are single instruments; even a decade of 5-minute
     candles per symbol is ~750k rows — comfortably one Arrow batch. Skewed
     universes (one instrument dominating) are bounded by per-group size,
     not executor count.
     """
-
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        if ts_col is not None:
-            order = [ts_col] if isinstance(ts_col, str) else list(ts_col)
-            pdf = pdf.sort_values(list(keys) + order)
-        return fn(pdf)
-
-    return grouped_fold(df, keys, wrapped, output_schema)
+    order = [ts_col] if isinstance(ts_col, str) else ts_col or ()
+    return grouped_fold(df, keys, fn, output_schema, order_by=order)
 
 
 def bollinger_bands(
@@ -173,31 +218,20 @@ def ema_macd_exact(
       ``floor(x * 1e6 + 0.5)`` (plain IEEE ops, no tie-break — the SQL
       twin applies the literal same expression, see functions/exact.q6),
     - step ``e_i = e_{i-1} + floor(2.0 * (v_i - e_{i-1}) / (n + 1.0))``
-      with the floor over the DOUBLE quotient — all operands stay far
-      below 2^53, so both engines compute the identical double and the
-      identical integer state,
+      (:func:`ema_chain`, one depth-1 chain per EMA) with the floor over
+      the DOUBLE quotient — all operands stay far below 2^53, so both
+      engines compute the identical double and the identical integer
+      state,
     - emit doubles only at the end (state / 1e6).
 
     MACD = ema_fast - ema_slow computed on the integer states, so even
     the difference is exact. EMA seeds at the first price (the common
     convention; a SMA warm-up seed would fold the same way)."""
-    import math
-
-    import numpy as np
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         v = np.floor(pdf[price_col].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        e_fast = np.empty(len(v), dtype=np.int64)
-        e_slow = np.empty(len(v), dtype=np.int64)
-        ef = es = 0
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                ef = es = vi
-            else:
-                ef += math.floor(2.0 * (vi - ef) / (fast + 1.0))
-                es += math.floor(2.0 * (vi - es) / (slow + 1.0))
-            e_fast[i] = ef
-            e_slow[i] = es
+        [e_fast] = ema_chain(v, [fast])
+        [e_slow] = ema_chain(v, [slow])
         return pdf.assign(
             ema_fast=e_fast / 1e6,
             ema_slow=e_slow / 1e6,
@@ -222,7 +256,6 @@ def bollinger_bands_exact(
     (~9e9 in price units — far above any real OHLCV window). n < 2 emits
     sd = 0 like :func:`bollinger_bands`. Oracle-checked in
     __spark_entry__ as x_bollinger_bands."""
-    import numpy as np
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf[price_col].to_numpy(dtype=float)

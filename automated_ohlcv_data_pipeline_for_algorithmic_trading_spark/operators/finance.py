@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import q6, u6
-from .extension import grouped_fold
+from .extension import ema_chain, grouped_fold
 
 __all__ = [
     "max_drawdown",
@@ -959,19 +959,12 @@ def heikin_ashi(
     key_list = list(keys)
     in_cols = [*key_list, order_col, open_col, high, low, close]
     src = df.select(*in_cols)
-    # explicit hash partitioning on the group key: AQE coalesces the
-    # small pre-grouped-map shuffle to ONE partition by bytes, which
-    # serializes every group's Arrow round-trip into a single task
-    # (measured 7.4 s -> sub-second for 150 groups at bench scale)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", ha_open double, ha_high double, ha_low double, ha_close double"
+    schema = (
+        f"{src.schema.toDDL()}, ha_open double, ha_high double,"
+        " ha_low double, ha_close double"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         o = np.floor(pdf[open_col].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
@@ -995,7 +988,7 @@ def heikin_ashi(
             ha_close=ha_c / 1e6,
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def supertrend(
@@ -1025,8 +1018,6 @@ def supertrend(
     BIGINT state), so the per-group pandas loop and a DuckDB recursive
     CTE with the same CASE logic compute identical states — the third
     recurrence family with an exact oracle after EMA and Heikin-Ashi.
-    Grouped-map per key with explicit repartitioning (the
-    one-task-AQE-coalesce fix all grouped-map operators here carry).
 
     Output: keys + order_col + h/l/c + (atr, st_upper, st_lower, trend,
     supertrend); rows before the ATR seed window emit NULL indicator
@@ -1037,16 +1028,12 @@ def supertrend(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", atr double, st_upper double, st_lower double,"
+    schema = (
+        f"{src.schema.toDDL()}, atr double, st_upper double, st_lower double,"
         " trend int, supertrend double"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
@@ -1114,7 +1101,7 @@ def supertrend(
             supertrend=masked(np.where(trend == 1, flb, fub)),
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def williams_r(
@@ -1474,9 +1461,6 @@ def adx(
     Flat-market edges: +DI/-DI are NULL while S_tr == 0; DX is 0 while
     S+ + S- == 0 (Wilder's convention). Warm-up bars emit NULL.
 
-    Grouped-map per key with explicit repartitioning (the
-    one-task-AQE-coalesce fix all grouped-map operators here carry).
-
     Output: keys + order_col + (pdi, mdi, adx).
     """
     import numpy as np
@@ -1484,15 +1468,9 @@ def adx(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", pdi double, mdi double, adx double"
-    )
+    schema = f"{src.schema.toDDL()}, pdi double, mdi double, adx double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
@@ -1544,7 +1522,7 @@ def adx(
             return pd.arrays.FloatingArray(x, np.isnan(x))  # NaN -> NULL
         return pdf.assign(pdi=masked(pdi), mdi=masked(mdi), adx=masked(adxv))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def parabolic_sar(
@@ -1583,24 +1561,16 @@ def parabolic_sar(
     same trick supertrend's oracle leans on.
 
     Output: keys + order + h/l/c + (psar, trend, ep, af); bar 1 emits
-    NULL indicator values (warm-up). Grouped-map per key with explicit
-    repartitioning (the one-task-AQE-coalesce fix all grouped-map
-    operators here carry).
+    NULL indicator values (warm-up).
     """
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", psar double, trend int, ep double, af int"
-    )
+    schema = f"{src.schema.toDDL()}, psar double, trend int, ep double, af int"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         lo = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
@@ -1661,7 +1631,7 @@ def parabolic_sar(
             ep=masked_px(ep_a), af=masked_i(af_a),
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def trix(
@@ -1672,9 +1642,9 @@ def trix(
     close: str = "close",
 ) -> DataFrame:
     """TRIX — 1-bar rate of change of a TRIPLE-smoothed EMA. Three
-    chained EMA recurrences (e2 folds over e1's states, e3 over e2's),
-    each the exact integer micro-unit fold of ema_macd_exact
-    (operators/extension.py): state += floor(2.0·(x − state)/(n+1.0))
+    chained EMA recurrences (e2 folds over e1's states, e3 over e2's) —
+    the depth-3 :func:`~.extension.ema_chain` exact integer micro-unit
+    fold: state += floor(2.0·(x − state)/(n+1.0))
     with the floor over the double quotient, all operands far below
     2^53, so pandas and a recursive CTE carrying (e1, e2, e3) compute
     identical BIGINT states. TRIX itself is an IEEE quotient of exact
@@ -1683,45 +1653,24 @@ def trix(
     Output: keys + order + close + (trix_ema, trix); the first bar's
     trix is NULL (no prior e3).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", trix_ema double, trix double"
-    )
+    schema = f"{src.schema.toDDL()}, trix_ema double, trix double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # applyInPandas gives NO within-group row order (upstream agg
-        # output is hash-ordered) — sort chronologically like every
-        # other recurrence fold or the EMA chain folds a shuffled series
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        m = len(v)
-        e3_a = np.empty(m, dtype=np.int64)
-        tx = np.full(m, np.nan)
-        e1 = e2 = e3 = 0
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                e1 = e2 = e3 = vi
-            else:
-                e1 += math.floor(2.0 * (vi - e1) / (n + 1.0))
-                e2 += math.floor(2.0 * (e1 - e2) / (n + 1.0))
-                p3 = e3
-                e3 += math.floor(2.0 * (e2 - e3) / (n + 1.0))
-                if p3 != 0:
-                    tx[i] = 100.0 * (e3 - p3) / p3
-            e3_a[i] = e3
+        e3 = ema_chain(v, [n] * 3)[2]
+        p3 = e3[:-1]
+        tx = np.full(len(v), np.nan)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tx[1:] = np.where(p3 != 0, 100.0 * (e3[1:] - p3) / p3, np.nan)
         txa = pd.arrays.FloatingArray(tx, np.isnan(tx))
-        return pdf.assign(trix_ema=e3_a / 1e6, trix=txa)
+        return pdf.assign(trix_ema=e3 / 1e6, trix=txa)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def cci(
@@ -1886,15 +1835,9 @@ def kama(
     cf6 = 2_000_000 // (fast + 1)
     cs6 = 2_000_000 // (slow + 1)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", er double, kama double"
-    )
+    schema = f"{src.schema.toDDL()}, er double, kama double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         m = len(p)
         er_a = np.full(m, np.nan)
@@ -1932,7 +1875,7 @@ def kama(
 
         return pdf.assign(er=masked(er_a), kama=masked(ka))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def vidya(
@@ -1971,15 +1914,9 @@ def vidya(
     key_list = list(keys)
     f6 = 2_000_000 // (s + 1)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", cmo double, vidya double"
-    )
+    schema = f"{src.schema.toDDL()}, cmo double, vidya double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         m = len(p)
         cmo_a = np.full(m, np.nan)
@@ -2017,7 +1954,7 @@ def vidya(
 
         return pdf.assign(cmo=masked(cmo_a), vidya=masked(va))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def klinger(
@@ -2063,14 +2000,9 @@ def klinger(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low, close, volume)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", kvo double, signal double"
+    schema = f"{src.schema.toDDL()}, kvo double, signal double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         h = np.floor(pdf[high].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         l = np.floor(pdf[low].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
         c = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
@@ -2115,7 +2047,7 @@ def klinger(
 
         return pdf.assign(kvo=masked(kvo_a), signal=masked(sig_a))
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def chande_momentum(
@@ -2392,49 +2324,33 @@ def ema_fold(
     - emit BOTH the BIGINT state (``state_col`` — downstream exact
       integer algebra) and the rescaled double (``out_col``).
 
-    Grouped-map per key, sorted chronologically inside the fold; seeds
-    at the first value. A recursive SQL CTE carrying one BIGINT state
-    replays it bit-identically.
+    A depth-1 :func:`~.extension.ema_chain` per key, in a grouped_fold
+    ordered by ``order_col``; seeds at the first value. A recursive SQL
+    CTE carrying one BIGINT state replays it bit-identically.
 
     Parallelism trap (measured, the r4 heikin_ashi lesson's second
     form): if ``df`` is ALREADY hash-partitioned on exactly ``keys``
     (e.g. it came out of a window over the same key), Catalyst removes
-    the explicit repartition below as redundant — and AQE then
+    grouped_fold's explicit repartition as redundant — and AQE then
     byte-coalesces the upstream ENSURE_REQUIREMENTS exchange to one
     partition, serializing every group's fold into a single task
     (8x measured at sf0.1). Callers deriving the input via a same-key
     window must cut the lineage first (localCheckpoint) so the
     repartition survives — see force_index.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
-    key_list = list(keys)
-    src = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        f", {state_col} bigint, {out_col} double"
-    )
+    schema = f"{df.schema.toDDL()}, {state_col} bigint, {out_col} double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(
             pdf[value_col].to_numpy(dtype=float) * scale + 0.5
         ).astype(np.int64)
-        e_a = np.empty(len(v), dtype=np.int64)
-        e = 0
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                e = vi
-            else:
-                e += math.floor(2.0 * (vi - e) / (n + 1.0))
-            e_a[i] = e
+        [e_a] = ema_chain(v, [n])
         return pdf.assign(**{state_col: e_a, out_col: e_a / scale})
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(df, keys, fold, schema, order_by=[order_col])
 
 
 def force_index(
@@ -2561,16 +2477,10 @@ def volume_index(
     src = df.select(
         *key_list, F.col(order_col), F.col(close), F.col(volume)
     )
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", nvi double, pvi double"
-    )
+    schema = f"{src.schema.toDDL()}, nvi double, pvi double"
     seed = int(base * 1e6)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         cu = np.floor(
             pdf[close].to_numpy(dtype=float) * 1e6 + 0.5
         ).astype(np.int64)
@@ -2619,7 +2529,7 @@ def volume_index(
         pvi_a = folded(ok & (vol[1:] > vol[:-1]))
         return pdf.assign(nvi=nvi_a / 1e6, pvi=pvi_a / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def dema_tema(
@@ -2642,39 +2552,21 @@ def dema_tema(
 
     Output: keys, order_col, close, dema, tema.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", dema double, tema double"
-    )
+    schema = f"{src.schema.toDDL()}, dema double, tema double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        m = len(v)
-        dema_a = np.empty(m, dtype=np.int64)
-        tema_a = np.empty(m, dtype=np.int64)
-        e1 = e2 = e3 = 0
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                e1 = e2 = e3 = vi
-            else:
-                e1 += math.floor(2.0 * (vi - e1) / (n + 1.0))
-                e2 += math.floor(2.0 * (e1 - e2) / (n + 1.0))
-                e3 += math.floor(2.0 * (e2 - e3) / (n + 1.0))
-            dema_a[i] = 2 * e1 - e2
-            tema_a[i] = 3 * e1 - 3 * e2 + e3
+        e1, e2, e3 = ema_chain(v, [n] * 3)
+        dema_a = 2 * e1 - e2
+        tema_a = 3 * e1 - 3 * e2 + e3
         return pdf.assign(dema=dema_a / 1e6, tema=tema_a / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def t3_ma(
@@ -2694,8 +2586,9 @@ def t3_ma(
         c4 = 1 + 3v + v³ + 3v²      (Σc = 1)
 
     The deepest chained-EMA fold in the family (dema/tema carry three
-    states; this carries six). Exactness: the dema_tema integer recipe
-    per state (micro-unit BIGINT, floor(2.0·(x−e)/(n+1.0)) steps); at
+    states; this is a depth-6 :func:`~.extension.ema_chain`).
+    Exactness: the dema_tema integer recipe per state (micro-unit
+    BIGINT, floor(2.0·(x−e)/(n+1.0)) steps); at
     v = 0.7 the coefficients ×1000 are exact integers (−343, 2499,
     −6069, 4913), so t3 is ONE BIGINT linear combination divided once
     at the end (states ≤ 1e9 micro-units × 6069 < 2^63 with room).
@@ -2703,36 +2596,20 @@ def t3_ma(
 
     Output: keys, order_col, close, t3.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + ", t3 double"
+    schema = f"{src.schema.toDDL()}, t3 double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        m = len(v)
-        t3_a = np.empty(m, dtype=np.int64)
-        e = [0] * 6
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                e = [vi] * 6
-            else:
-                prev = vi
-                for k in range(6):
-                    e[k] += math.floor(2.0 * (prev - e[k]) / (n + 1.0))
-                    prev = e[k]
-            t3_a[i] = -343 * e[5] + 2499 * e[4] - 6069 * e[3] + 4913 * e[2]
+        e = ema_chain(v, [n] * 6)
+        t3_a = -343 * e[5] + 2499 * e[4] - 6069 * e[3] + 4913 * e[2]
         return pdf.assign(t3=t3_a / 1e9)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def holt_winters(
@@ -2772,12 +2649,9 @@ def holt_winters(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + (
-        ", level double, trend double, season double, forecast double"
+    schema = (
+        f"{src.schema.toDDL()}, level double, trend double, season double,"
+        " forecast double"
     )
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
@@ -2789,7 +2663,6 @@ def holt_winters(
         return -((-num) // 1_000_000)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
@@ -2818,7 +2691,7 @@ def holt_winters(
             level=lv / 1e6, trend=tr / 1e6, season=se / 1e6, forecast=fc / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def holt_winters_multiplicative(
@@ -2876,12 +2749,9 @@ def holt_winters_multiplicative(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + (
-        ", level double, trend double, season double, forecast double"
+    schema = (
+        f"{src.schema.toDDL()}, level double, trend double, season double,"
+        " forecast double"
     )
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
@@ -2893,7 +2763,6 @@ def holt_winters_multiplicative(
         return -((-num) // den)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
@@ -2927,7 +2796,7 @@ def holt_winters_multiplicative(
             level=lv / 1e6, trend=tr / 1e6, season=se / 1e6, forecast=fc / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def elder_impulse_states(
@@ -2941,54 +2810,35 @@ def elder_impulse_states(
     reads (both rising = green / both falling = red / mixed = blue;
     the caller derives the label with two lags over this output).
 
-    One fold, FOUR integer micro-unit states (e13, e12, e26, sig9):
-    the trend EMA and the MACD pair use the standard exact recipe; the
-    signal line is an EMA OVER A DERIVED SERIES (e12 − e26), folded in
-    the same pass — a chained recurrence on an intermediate, not on
+    One fold, FOUR integer micro-unit states (e13, e12, e26, sig9),
+    each a depth-1 :func:`~.extension.ema_chain`: the trend EMA and the
+    MACD pair fold the price; the signal line is an EMA OVER A DERIVED
+    SERIES (e12 − e26) — a chained recurrence on an intermediate, not on
     price. First bar: macd = sig = hist = 0 by construction.
 
     Output: keys, order_col, close, ema13, macd, hist (all exact
     micro-unit multiples, divided once).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", ema13 double, macd double, hist double"
-    )
+    schema = f"{src.schema.toDDL()}, ema13 double, macd double, hist double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(np.int64)
-        m = len(v)
-        ema13_a = np.empty(m, dtype=np.int64)
-        macd_a = np.empty(m, dtype=np.int64)
-        hist_a = np.empty(m, dtype=np.int64)
-        e13 = e12 = e26 = sig = 0
-        for i, vi in enumerate(v.tolist()):
-            if i == 0:
-                e13 = e12 = e26 = vi
-                sig = 0
-            else:
-                e13 += math.floor(2.0 * (vi - e13) / 14.0)
-                e12 += math.floor(2.0 * (vi - e12) / 13.0)
-                e26 += math.floor(2.0 * (vi - e26) / 27.0)
-                sig += math.floor(2.0 * ((e12 - e26) - sig) / 10.0)
-            ema13_a[i] = e13
-            macd_a[i] = e12 - e26
-            hist_a[i] = e12 - e26 - sig
+        [e13] = ema_chain(v, [13])
+        [e12] = ema_chain(v, [12])
+        [e26] = ema_chain(v, [26])
+        macd_a = e12 - e26
+        # the signal seeds at the first macd, which is 0 by construction
+        [sig] = ema_chain(macd_a, [9])
         return pdf.assign(
-            ema13=ema13_a / 1e6, macd=macd_a / 1e6, hist=hist_a / 1e6
+            ema13=e13 / 1e6, macd=macd_a / 1e6, hist=(macd_a - sig) / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def mcginley_dynamic(
@@ -3032,16 +2882,10 @@ def mcginley_dynamic(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", mcginley double"
-    )
+    schema = f"{src.schema.toDDL()}, mcginley double"
     kn = k * n
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         v = pdf[close].to_numpy(dtype=float)
         out = np.empty(len(v), dtype=float)
         md = 0.0
@@ -3057,7 +2901,7 @@ def mcginley_dynamic(
             out[i] = md
         return pdf.assign(mcginley=out)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def linreg_slope(
@@ -3199,15 +3043,9 @@ def kalman_1d(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", kf_x double, kf_p double"
-    )
+    schema = f"{src.schema.toDDL()}, kf_x double, kf_p double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         z = pdf[close].to_numpy(dtype=float)
         m = len(z)
         xs = np.empty(m)
@@ -3225,7 +3063,7 @@ def kalman_1d(
             ps[i] = p
         return pdf.assign(kf_x=xs, kf_p=ps)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def coppock_curve(
@@ -3486,42 +3324,23 @@ def mass_index(
     Output: keys, order_col, mass_ratio (per-bar EMA ratio), mass_index
     (NULL until the ratio window holds sum_n bars).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", e1 bigint, e2 bigint"
-    )
+    schema = f"{src.schema.toDDL()}, e1 bigint, e2 bigint"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         rng = np.floor(
             (pdf[high].to_numpy(dtype=float) - pdf[low].to_numpy(dtype=float))
             * 1e6
             + 0.5
         ).astype(np.int64)
-        m = len(rng)
-        e1_a = np.empty(m, dtype=np.int64)
-        e2_a = np.empty(m, dtype=np.int64)
-        e1 = e2 = 0
-        for i, vi in enumerate(rng.tolist()):
-            if i == 0:
-                e1 = e2 = vi
-            else:
-                e1 += math.floor(2.0 * (vi - e1) / (ema_n + 1.0))
-                e2 += math.floor(2.0 * (e1 - e2) / (ema_n + 1.0))
-            e1_a[i] = e1
-            e2_a[i] = e2
-        return pdf.assign(e1=e1_a, e2=e2_a)
+        e1, e2 = ema_chain(rng, [ema_n] * 2)
+        return pdf.assign(e1=e1, e2=e2)
 
-    folded = grouped_fold(src, key_list, fold, schema)
+    folded = grouped_fold(src, key_list, fold, schema, order_by=[order_col])
     ratio = F.when(
         F.col("e2") > 0,
         F.col("e1").cast("double") / F.col("e2").cast("double"),
@@ -3873,9 +3692,8 @@ def renko_bricks(
     on prices). All quantities stay positive, so `//` floor division
     agrees between Python and DuckDB.
 
-    Fold discipline: repartition by key, sort inside the fold, O(1)
-    integer work per bar (the standard applyInPandas recurrence shape —
-    cf. volume_index/kalman_1d).
+    Fold discipline: grouped_fold ordered by ``order_col``, O(1)
+    integer work per bar (cf. volume_index/kalman_1d).
 
     Output: keys, order_col, close, n_bricks, dir, brick_lo, brick_hi.
     """
@@ -3885,17 +3703,14 @@ def renko_bricks(
     src = df.filter(F.col(close) > 0).select(
         *key_list, F.col(order_col), F.col(close)
     )
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", n_bricks long, dir long, brick_lo double, brick_hi double"
+    schema = (
+        f"{src.schema.toDDL()}, n_bricks long, dir long,"
+        " brick_lo double, brick_hi double"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        pdf = pdf.sort_values([*key_list, order_col])
         cu = np.floor(
             pdf[close].to_numpy(dtype=float) * 1e6 + 0.5
         ).astype(np.int64)
@@ -3928,7 +3743,7 @@ def renko_bricks(
             n_bricks=nb, dir=dr, brick_lo=los / 1e6, brick_hi=his / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def chandelier_exit(
@@ -4024,10 +3839,11 @@ def tsi(
         tsi = 100 · EMA_fast(EMA_slow(Δp)) / EMA_fast(EMA_slow(|Δp|))
 
     A nested recurrence (four EMA states whose fast stages consume the
-    OUTPUT of the slow stages), folded in ONE grouped-map pass: the
-    momentum diff, both slow EMAs, and both fast EMAs all advance
-    per-bar on int64 micro-unit states, so one shuffle covers what four
-    chained ema_fold calls would do in four.
+    OUTPUT of the slow stages): two ``[slow, fast]``
+    :func:`~.extension.ema_chain` calls, over the momentum and over its
+    absolute value, in ONE grouped-map pass on int64 micro-unit states,
+    so one shuffle covers what four chained ema_fold calls would do in
+    four.
 
     Exactness contract (the ema_fold family rule): close quantizes with
     floor(p·1e6+0.5); every state update is
@@ -4047,49 +3863,29 @@ def tsi(
     TSI and are dropped in BOTH engines (NaN/NULL cross-engine hashing
     is exactly the ambiguity the registry avoids).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    schema = src.schema.simpleString()[7:-1].replace(":", " ") + (
-        ", mtm double, tsi double"
-    )
-    ds, dfst = slow + 1.0, fast + 1.0
+    schema = f"{src.schema.toDDL()}, mtm double, tsi double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         q = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
-        m = len(q)
-        mtm_a = np.full(m, np.nan)
-        tsi_a = np.full(m, np.nan)
-        em = am = em2 = am2 = 0
-        ql = q.tolist()
-        for i in range(1, m):
-            mi = ql[i] - ql[i - 1]
-            ai = abs(mi)
-            if i == 1:
-                em, am = mi, ai
-                em2, am2 = em, am
-            else:
-                em += math.floor(2.0 * (mi - em) / ds)
-                am += math.floor(2.0 * (ai - am) / ds)
-                em2 += math.floor(2.0 * (em - em2) / dfst)
-                am2 += math.floor(2.0 * (am - am2) / dfst)
-            mtm_a[i] = mi / 1e6
-            if am2 != 0:
-                tsi_a[i] = 100.0 * em2 / am2
+        mtm = np.diff(q)
+        em2 = ema_chain(mtm, [slow, fast])[1]
+        am2 = ema_chain(np.abs(mtm), [slow, fast])[1]
+        mtm_a = np.full(len(q), np.nan)
+        tsi_a = np.full(len(q), np.nan)
+        mtm_a[1:] = mtm / 1e6
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tsi_a[1:] = np.where(am2 != 0, 100.0 * em2 / am2, np.nan)
         out = pdf.assign(mtm=mtm_a, tsi=tsi_a)
         return out[~np.isnan(tsi_a)]
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def zigzag_pivots(
@@ -4125,9 +3921,6 @@ def zigzag_pivots(
 
     key_list = list(keys)
     src = df.filter(F.col(close) > 0).select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
     date_t = dict(src.dtypes)[order_col]
     key_t = ", ".join(f"{k} {t}" for k, t in src.dtypes if k in key_list)
     schema = (
@@ -4136,7 +3929,6 @@ def zigzag_pivots(
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         q = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
@@ -4179,7 +3971,7 @@ def zigzag_pivots(
             columns=[*key_list, "pivot_date", "pivot_price", "pivot_type"],
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def alligator(
@@ -4220,16 +4012,14 @@ def alligator(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, high, low)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
+    schema = (
+        f"{src.schema.toDDL()}, mid double, jaw double,"
+        " teeth double, lips double"
     )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", mid double, jaw double, teeth double, lips double"
     nj, nt, nl = jaw[0], teeth[0], lips[0]
     oj, ot, ol = jaw[1], teeth[1], lips[1]
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         m = np.floor(
             (pdf[high].to_numpy(dtype=float) + pdf[low].to_numpy(dtype=float))
             * 500000.0
@@ -4267,7 +4057,7 @@ def alligator(
             lips=disp(la, ol),
         )
 
-    out = grouped_fold(src, key_list, fold, schema)
+    out = grouped_fold(src, key_list, fold, schema, order_by=[order_col])
     return out.select(*key_list, order_col, "mid", "jaw", "teeth", "lips")
 
 
@@ -4317,16 +4107,11 @@ def garch_vol(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", ret double, cond_var double, sigma double"
+    schema = f"{src.schema.toDDL()}, ret double, cond_var double, sigma double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         import math
 
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
@@ -4367,7 +4152,7 @@ def garch_vol(
             ret=masked(ret_a), cond_var=masked(var_a), sigma=masked(sig_a)
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def holt_linear(
@@ -4406,11 +4191,10 @@ def holt_linear(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
+    schema = (
+        f"{src.schema.toDDL()}, level double, trend double,"
+        " forecast double"
     )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", level double, trend double, forecast double"
     ca6 = 1_000_000 - alpha6
     cg6 = 1_000_000 - gamma6
 
@@ -4420,7 +4204,6 @@ def holt_linear(
         return -((-num) // 1_000_000)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
         )
@@ -4442,7 +4225,7 @@ def holt_linear(
             level=lv / 1e6, trend=tr / 1e6, forecast=(lv + tr) / 1e6
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def regime_viterbi(
@@ -4487,14 +4270,9 @@ def regime_viterbi(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, ret_col)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
-    schema = base_schema + ", regime int, margin double"
+    schema = f"{src.schema.toDDL()}, regime int, margin double"
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         r = pdf[ret_col].to_numpy(dtype=np.int64)
         m = len(r)
         regime = np.empty(m, dtype=np.int32)
@@ -4514,7 +4292,7 @@ def regime_viterbi(
             margin[i] = s_up - s_dn
         return pdf.assign(regime=regime, margin=margin / 1e6)
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])
 
 
 def regime_conditional_holt(
@@ -4573,12 +4351,8 @@ def regime_conditional_holt(
 
     key_list = list(keys)
     src = df.select(*key_list, order_col, close, ret_col)
-    src = src.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, *key_list
-    )
-    base_schema = ", ".join(f"{k} {t}" for k, t in src.dtypes)
     schema = (
-        base_schema + ", regime int, level double, trend double,"
+        f"{src.schema.toDDL()}, regime int, level double, trend double,"
         " forecast double"
     )
     ca_up6 = 1_000_000 - alpha_up6
@@ -4592,7 +4366,6 @@ def regime_conditional_holt(
         return -((-num) // 1_000_000)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*key_list, order_col])
         r = pdf[ret_col].to_numpy(dtype=np.int64)
         p = np.floor(pdf[close].to_numpy(dtype=float) * 1e6 + 0.5).astype(
             np.int64
@@ -4633,4 +4406,4 @@ def regime_conditional_holt(
             forecast=(lv + tr) / 1e6,
         )
 
-    return grouped_fold(src, key_list, fold, schema)
+    return grouped_fold(src, key_list, fold, schema, order_by=[order_col])

@@ -764,16 +764,6 @@ def sq8_quantize(
     )
 
 
-def _int_dot(a: Column, b: Column) -> Column:
-    """Exact integer dot product (long accumulator; |q|<=127 so a
-    4096-dim dot is ~6.6e7 — nowhere near overflow)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def sq8_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -787,7 +777,7 @@ def sq8_knn(
     scalar-quantization ANN every vector store ships next to IVF/LSH:
 
     1. scan: approximate cosine over the int8 codes
-       (int_dot(qa, qb) / (|qa| |qb|) — per-vector scales cancel in the
+       (int64 dot(qa, qb) / (|qa| |qb|) — per-vector scales cancel in the
        cosine, so no dequantization is needed);
     2. shortlist: top ``rerank`` candidates per query by approx cosine
        (neighbor-id tie-break — total order);
@@ -809,6 +799,9 @@ def sq8_knn(
     codes are collected at call time — the same broadcast-sized rows the
     previous broadcast-join form shipped to every executor — so the
     operator snapshots ``queries`` as of the call.
+    Like :func:`brute_force_knn` it raises ``ValueError`` past
+    ``BRUTE_KNN_MAX_QUERIES`` (non-zero) query vectors; that collect is
+    bounded, so an oversized query set fails clearly, not as a driver OOM.
     """
     # zero vectors (qn = 0) have no defined cosine; excluding them BEFORE
     # ranking matters because 0/0 = NaN and Spark sorts NaN ABOVE every
@@ -851,7 +844,15 @@ def sq8_knn(
     import numpy as np
     import pandas as pd
 
-    qrows = qq.collect()
+    # bounded like brute_force_knn: the query codes become one in-memory
+    # matrix on the driver and in every scan task's closure
+    qrows = qq.limit(BRUTE_KNN_MAX_QUERIES + 1).collect()
+    if len(qrows) > BRUTE_KNN_MAX_QUERIES:
+        raise ValueError(
+            f"sq8_knn query set exceeds max_queries={BRUTE_KNN_MAX_QUERIES}:"
+            f" use an ANN index (ivf_probe/lsh/pq) for corpus-scale"
+            f" query sets"
+        )
     id_type = corpus.schema[id_col].dataType.simpleString()
     par = corpus.sparkSession.sparkContext.defaultParallelism
     craw = corpus.repartition(par).select(
@@ -1289,29 +1290,6 @@ def _pq_fit(
     # downstream
     rows = [(r["sub"], r["cell"], list(r["centroid"])) for r in cents.collect()]
     return spark.createDataFrame(rows, "sub int, cell int, centroid array<double>")
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    m: int = 16,
-    k: int = 16,
-    n_iter: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: a deterministic seeded-Lloyd
-    k-means per SUBSPACE — the unit-NORMALIZED vector is split into
-    ``m`` contiguous ``dim/m``-dim slices and each slice gets its own
-    ``k``-entry codebook; all m fits advance together in one fused job
-    per Lloyd round (see :func:`_pq_fit`). Same md5-bottom-k seed rows
-    in every subspace, so the whole fit replays in SQL.
-
-    Returns (sub int, cell int, centroid array<double>) — m*k tiny
-    rows, broadcast everywhere downstream.
-    """
-    base, el = _pq_exploded(corpus, m, dim, id_col, vec_col)
-    return _pq_fit(base, el, k, n_iter, dim // m)
 
 
 def pq_index(

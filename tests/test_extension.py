@@ -148,6 +148,43 @@ def test_grouped_fold_matches_grouped_map_across_batch_boundaries(spark):
     for k, _seq, _v, _c, n in got:
         assert n == sizes[k]
 
+    # order_by: the JVM sort hands each group over in (order_by, NULLs
+    # last) order, so a fold that does NOT sort matches a sorting
+    # grouped-map fold — on shuffled input with NULL order values
+    import random
+
+    rows_o = rows + [("a", None, 100.0), ("c", None, 7.5)]
+    random.Random(3).shuffle(rows_o)
+    df_o = spark.createDataFrame(rows_o, "k string, seq int, v double").repartition(3)
+
+    def fold_unsorted(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.assign(csum=pdf["v"].cumsum(), n=len(pdf))
+
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        got_o = sorted(
+            (
+                tuple(r)
+                for r in grouped_fold(
+                    df_o, ["k"], fold_unsorted, schema, order_by=["seq"]
+                ).collect()
+            ),
+            key=lambda t: (*skey(t)[:2], t[1] is None, t[1] or 0),
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    want_o = sorted(
+        (
+            tuple(r)
+            for r in df_o.groupBy("k").applyInPandas(fold, schema=schema).collect()
+        ),
+        key=lambda t: (*skey(t)[:2], t[1] is None, t[1] or 0),
+    )
+    assert got_o == want_o
+    # the NULL-order row folds last: its running sum is the group total
+    last = {t[0]: t[3] for t in got_o if t[1] is None}
+    assert last["a"] == sum(v for g, _s, v in rows_o if g == "a")
+
 
 def test_grouped_fold_rejects_float_keys(spark):
     """A FLOAT/DOUBLE key would let a NULL-key group and a NaN-key group

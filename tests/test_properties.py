@@ -571,3 +571,49 @@ def test_ema_fold_matches_pure_python_replay(rows):
         j = idx.get(sym, 0)
         idx[sym] = j + 1
         assert got[(f"s{sym}", i)].ema_state == expect[j]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.integers(min_value=-(10**12), max_value=10**12), min_size=0, max_size=40
+    ),
+    st.one_of(
+        st.integers(min_value=1, max_value=6).flatmap(
+            lambda d: st.integers(min_value=1, max_value=60).map(lambda n: [n] * d)
+        ),
+        st.tuples(
+            st.integers(min_value=1, max_value=60),
+            st.integers(min_value=1, max_value=60),
+        ).map(list),
+    ),
+)
+def test_ema_chain_matches_nested_loop_replay(values, ns):
+    """ema_chain (the shared integer-EMA kernel) equals the literal
+    per-bar nested loop the chained indicators used to carry: all stages
+    seed at the first value, stage k folds stage k-1's updated state."""
+    import math
+
+    import numpy as np
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.extension import (
+        ema_chain,
+    )
+
+    got = ema_chain(np.asarray(values, dtype=np.int64), ns)
+    expect = [[] for _ in ns]
+    e = [0] * len(ns)
+    for i, x in enumerate(values):
+        if i == 0:
+            e = [x] * len(ns)
+        else:
+            prev = x
+            for k, n in enumerate(ns):
+                e[k] += math.floor(2.0 * (prev - e[k]) / (n + 1.0))
+                prev = e[k]
+        for k in range(len(ns)):
+            expect[k].append(e[k])
+    assert len(got) == len(ns)
+    for g, w in zip(got, expect):
+        assert g.dtype == np.int64
+        assert g.tolist() == w

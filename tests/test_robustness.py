@@ -277,3 +277,22 @@ def test_gemm_ann_paths_drop_null_vectors(spark):
     assert len(b) == 6  # 3 vectors x 2 tables
     knn = sq8_knn(df.filter(F.col("vec_id") == 1), df, k=2, rerank=3).collect()
     assert sorted((r["query_id"], r["neighbor_id"]) for r in knn) == [(1, 3), (1, 4)]
+
+
+def test_sq8_knn_caps_the_query_collect(spark, monkeypatch):
+    """sq8_knn collects the query codes to the driver; past
+    BRUTE_KNN_MAX_QUERIES it must raise a clear ValueError instead of
+    shipping an unbounded matrix."""
+    import pytest
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators import (
+        similarity,
+    )
+
+    rows = [(i, [float((i * 7 + j) % 11) + 1.0 for j in range(8)]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "BRUTE_KNN_MAX_QUERIES", 3)
+    with pytest.raises(ValueError, match="max_queries=3"):
+        similarity.sq8_knn(df.filter("vec_id < 4"), df, k=2, rerank=3)
+    # at the cap the operator still runs
+    assert similarity.sq8_knn(df.filter("vec_id < 3"), df, k=2, rerank=3).count() == 6
