@@ -86,8 +86,16 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.multi
     extract_features,
     text_as_media,
 )
+from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators import (
+    dedup_similarity as _dedup_similarity_mod,
+    similarity as _similarity_mod,
+)
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.plans.etl import (
     bronze_to_silver,
+)
+from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.persisted import (
+    artifact_dir,
+    build_once,
 )
 from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.schemas import (
     RAW_ENVELOPE_SCHEMA,
@@ -6559,56 +6567,17 @@ def emb_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prune_stale_siblings(path: str) -> None:
-    """GC superseded versions of a persisted index: sibling directories
-    whose tag shares this index's kind+sf prefix but carries a
-    different size+mtime suffix are unreachable (their source was
-    regenerated), and without pruning every testdata refresh leaves a
-    full stale copy under spark-warehouse/ (round-9 ADVICE growth note
-    — same rule as sources/bucketed's layout GC)."""
-    import os
-    import shutil
-
-    parent = os.path.dirname(path)
-    name = os.path.basename(path)
-    parts = name.rsplit("-", 2)
-    if len(parts) != 3 or not os.path.isdir(parent):
-        return
-    # strict tag match (prefix + numeric size + numeric mtime): a bare
-    # startswith would also claim a DIFFERENT index whose tag merely
-    # extends this one's prefix (e.g. sf dirs 'sf1' vs 'sf1-new') and
-    # delete a layout other sessions still read — same rule as
-    # sources/bucketed's layout GC (round-10 ADVICE)
-    import re as _re
-
-    pat = _re.compile(
-        "^" + _re.escape(parts[0]) + r"-\d+-\d+$"
-    )
-    for sib in os.listdir(parent):
-        if sib != name and pat.match(sib):
-            shutil.rmtree(os.path.join(parent, sib), ignore_errors=True)
-
-
-def _ann_index_dir(sf_dir: str, kind: str) -> str:
-    """Deterministic on-disk location for a persisted ANN index over
-    ``sf_dir``'s embeddings table, keyed by the SOURCE file's size+mtime
-    so a regenerated testdata set can never be probed through a stale
-    index. Lives under the gitignored spark-warehouse/."""
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = "{}-{}-{}-{}".format(
-        kind,
-        os.path.basename(os.path.normpath(sf_dir)),
-        st.st_size,
-        int(st.st_mtime),
-    )
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "spark-warehouse",
+def _ann_index_dir(sf_dir: str, kind: str, **params) -> str:
+    """Location of the persisted ANN index ``kind`` over ``sf_dir``'s
+    embeddings table, built by ``operators/similarity.py`` with
+    ``params`` (``sources/persisted.artifact_dir``: a regenerated table,
+    another parameter or edited builder code is another location)."""
+    return artifact_dir(
         "ann_index",
-        tag,
+        kind,
+        f"{sf_dir}/embeddings.parquet",
+        params,
+        code=(_similarity_mod,),
     )
 
 
@@ -6624,27 +6593,23 @@ def emb_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe output is bit-identical to the one-shot path (the
     lifecycle contract tests pin) and shares its SQL oracle; the bench
     delta between the two rows IS the amortized fit cost."""
-    import os
-
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.similarity import (
         ivf_index,
         ivf_probe,
     )
 
-    idx = _ann_index_dir(sf_dir, "ivf")
+    fit = dict(n_lists=8, n_iter=2, dim=64)
+    idx = _ann_index_dir(sf_dir, "ivf", partition="cell", **fit)
     emb = _t(spark, sf_dir, "embeddings")
-    marker = os.path.join(idx, "_BUILT")
-    if not os.path.exists(marker):
-        cdf, assignments = ivf_index(emb, n_lists=8, n_iter=2, dim=64)
-        cdf.write.mode("overwrite").parquet(os.path.join(idx, "centroids"))
-        assignments.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(idx, "assignments")
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
-        _prune_stale_siblings(idx)
-    cdf = spark.read.parquet(os.path.join(idx, "centroids"))
-    assignments = spark.read.parquet(os.path.join(idx, "assignments"))
+
+    def build(tmp: str) -> None:
+        cdf, assignments = ivf_index(emb, **fit)
+        cdf.write.parquet(f"{tmp}/centroids")
+        assignments.write.partitionBy("cell").parquet(f"{tmp}/assignments")
+
+    build_once(idx, build)
+    cdf = spark.read.parquet(f"{idx}/centroids")
+    assignments = spark.read.parquet(f"{idx}/assignments")
     queries_df = emb.filter(F.col("vec_id") < 10)
     return ivf_probe(queries_df, cdf, assignments, k=5, n_probe=3)
 
@@ -6659,29 +6624,25 @@ def emb_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join). Same params as ``emb_pq_ann`` — bit-identical output,
     shared oracle; the bench delta between the rows is the amortized
     fit."""
-    import os
-
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.similarity import (
         pq_index,
         pq_probe,
     )
 
-    idx = _ann_index_dir(sf_dir, "pq")
+    fit = dict(m=16, k=16, n_iter=2, dim=64)
+    idx = _ann_index_dir(sf_dir, "pq", partition="sub", **fit)
     emb = _t(spark, sf_dir, "embeddings")
-    marker = os.path.join(idx, "_BUILT")
-    if not os.path.exists(marker):
-        cb, codes, vectors = pq_index(emb, m=16, k=16, n_iter=2, dim=64)
-        cb.write.mode("overwrite").parquet(os.path.join(idx, "codebooks"))
-        codes.write.mode("overwrite").partitionBy("sub").parquet(
-            os.path.join(idx, "codes")
-        )
-        vectors.write.mode("overwrite").parquet(os.path.join(idx, "vectors"))
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
-        _prune_stale_siblings(idx)
-    cb = spark.read.parquet(os.path.join(idx, "codebooks"))
-    codes = spark.read.parquet(os.path.join(idx, "codes"))
-    vectors = spark.read.parquet(os.path.join(idx, "vectors"))
+
+    def build(tmp: str) -> None:
+        cb, codes, vectors = pq_index(emb, **fit)
+        cb.write.parquet(f"{tmp}/codebooks")
+        codes.write.partitionBy("sub").parquet(f"{tmp}/codes")
+        vectors.write.parquet(f"{tmp}/vectors")
+
+    build_once(idx, build)
+    cb = spark.read.parquet(f"{idx}/codebooks")
+    codes = spark.read.parquet(f"{idx}/codes")
+    vectors = spark.read.parquet(f"{idx}/vectors")
     queries_df = emb.filter(F.col("vec_id") < 10)
     return pq_probe(
         queries_df, cb, codes, vectors, k=5, shortlist_mult=16, m=16, dim=64
@@ -12338,26 +12299,17 @@ FROM sfin ORDER BY user_id, timestamp_unix, event_id
 
 
 def _dup_index_dir(sf_dir: str, threshold: float) -> str:
-    """On-disk location for the persisted dedup-components index over
-    ``sf_dir``'s documents table — the ``_ann_index_dir`` recipe, keyed
-    by the SOURCE file's size+mtime AND the near-dup threshold so a
-    regenerated corpus or a different similarity bar can never be read
-    through a stale decision set."""
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = "comp{}-{}-{}-{}".format(
-        int(threshold * 100),
-        os.path.basename(os.path.normpath(sf_dir)),
-        st.st_size,
-        int(st.st_mtime),
-    )
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "spark-warehouse",
+    """Location of the persisted dedup-components index over
+    ``sf_dir``'s documents table at near-dup ``threshold``, built by
+    ``operators/dedup_similarity.py`` (``sources/persisted.artifact_dir``;
+    the threshold also names the kind, so two thresholds' decision sets
+    are two live artifacts)."""
+    return artifact_dir(
         "dup_index",
-        tag,
+        f"comp{int(threshold * 100)}",
+        f"{sf_dir}/documents.parquet",
+        {"threshold": threshold},
+        code=(_dedup_similarity_mod,),
     )
 
 
@@ -12366,29 +12318,26 @@ def _dup_components_persisted(
 ) -> DataFrame:
     """Converged dedup decisions (doc_id, keeper_id) as a PERSISTED
     artifact: the minhash-pairs + pointer-jumping chain runs only when
-    the on-disk parquet is missing or its source changed (`_BUILT`
-    marker, the emb_ivf_probe lifecycle); every downstream report reads
+    the on-disk parquet is missing or its source changed
+    (``sources/persisted.build_once``); every downstream report reads
     the stored table. This is how the decision set works at 100 TB —
     components are computed ONCE per corpus version, then cluster
     stats, keeper joins and removal plans are cheap scans of the
     decisions, not re-runs of the whole near-dup chain."""
-    import os
-
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         minhash_dup_decisions,
     )
 
     idx = _dup_index_dir(sf_dir, threshold)
-    marker = os.path.join(idx, "_BUILT")
-    comp_path = os.path.join(idx, "components")
-    if not os.path.exists(marker):
+
+    def build(tmp: str) -> None:
         docs = _t(spark, sf_dir, "documents")
-        comp = minhash_dup_decisions(docs, threshold=threshold)
-        comp.write.mode("overwrite").parquet(comp_path)
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
-        _prune_stale_siblings(idx)
-    return spark.read.parquet(comp_path)
+        minhash_dup_decisions(docs, threshold=threshold).write.parquet(
+            f"{tmp}/components"
+        )
+
+    build_once(idx, build)
+    return spark.read.parquet(f"{idx}/components")
 
 
 def d_dup_components_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13055,39 +13004,31 @@ def s_stream_emb_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stream_emb_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once lifecycle for the streaming-ANN base index: seeded IVF
     (8 lists, 2 Lloyd iterations) fit on the CORPUS 90% of ``sf_dir``'s
-    embeddings (vec_id % 10 != 0), persisted under the size+mtime-keyed
-    ``_ann_index_dir`` with layout v2 — assignments ``partitionBy(cell)``
-    so every probe (the streaming sink's per-batch screen, the drift
-    recall report) prunes to touched cell partitions at the scan
-    (round-10 VERDICT item 2). The marker carries the layout version, so
-    a v1 (flat) index rebuilds once and stale siblings are GC'd."""
-    import os
-    import shutil
-
+    embeddings (vec_id % 10 != 0), persisted under ``_ann_index_dir``
+    with assignments ``partitionBy(cell)`` so every probe (the streaming
+    sink's per-batch screen, the drift recall report) prunes to touched
+    cell partitions at the scan (round-10 VERDICT item 2). The corpus
+    filter and the partition column are build parameters, so a layout
+    change is a new location."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.similarity import (
         ivf_index,
     )
 
-    base = _ann_index_dir(sf_dir, "stream_emb")
-    marker = os.path.join(base, "_BUILT")
-    try:
-        with open(marker) as fh:
-            if fh.read().strip() == "cellpart-v2":
-                return base
-    except OSError:
-        pass
-    shutil.rmtree(base, ignore_errors=True)
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 10 != 0)
-    cdf, assignments = ivf_index(corpus, n_lists=8, n_iter=2, dim=64)
-    cdf.write.mode("overwrite").parquet(f"{base}/centroids")
-    assignments.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{base}/assignments"
+    fit = dict(n_lists=8, n_iter=2, dim=64)
+    corpus_rule = "vec_id % 10 != 0"
+
+    def build(tmp: str) -> None:
+        corpus = _t(spark, sf_dir, "embeddings").filter(F.expr(corpus_rule))
+        cdf, assignments = ivf_index(corpus, **fit)
+        cdf.write.parquet(f"{tmp}/centroids")
+        assignments.write.partitionBy("cell").parquet(f"{tmp}/assignments")
+
+    return build_once(
+        _ann_index_dir(
+            sf_dir, "stream_emb", corpus=corpus_rule, partition="cell", **fit
+        ),
+        build,
     )
-    with open(marker, "w") as fh:
-        fh.write("cellpart-v2\n")
-    _prune_stale_siblings(base)
-    return base
 
 
 def _run_emb_dedup_stream(
@@ -13117,8 +13058,8 @@ def _run_emb_dedup_stream(
     )
     root = tempfile.mkdtemp(prefix="embdedup_")
     try:
-        # the base IVF index is built ONCE per corpus version (the
-        # emb_ivf_probe `_BUILT` lifecycle) and FILE-COPIED into the
+        # the base IVF index is built ONCE per corpus version
+        # (sources/persisted.build_once) and FILE-COPIED into the
         # run's scratch dir — the sink mutates its copy (appends every
         # batch), so the persisted base must stay immutable while the
         # per-run fit cost amortizes away (measured ~6 s of the 11 s

@@ -2,8 +2,6 @@ from .candles import (  # noqa: F401
     clean_symbol,
     normalize_symbol,
     epoch_to_timestamp,
-    timestamp_to_epoch,
-    with_calendar_cols,
     iso_utc,
     price_change_cols,
     coalesce_aliases,

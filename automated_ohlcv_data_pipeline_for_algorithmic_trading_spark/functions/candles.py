@@ -43,27 +43,12 @@ def epoch_to_timestamp(epoch: ColumnOrName) -> Column:
     return F.timestamp_seconds(_col(epoch).cast("long"))
 
 
-def timestamp_to_epoch(ts: ColumnOrName) -> Column:
-    return F.unix_timestamp(_col(ts))
-
-
 def epoch_any_unit(ts: ColumnOrName) -> Column:
     """P10 — heuristic epoch-unit detection: numeric > 1e12 is millis,
     > 1e9 is seconds (etl/python_etl/transforms.py:27-39)."""
     c = _col(ts).cast("double")
     return F.when(c > 1e12, F.timestamp_seconds(c / 1000.0)).otherwise(
         F.timestamp_seconds(c)
-    )
-
-
-def with_calendar_cols(df: DataFrame, ts_col: ColumnOrName = "timestamp_iso") -> DataFrame:
-    """F4 — derive year/month/day/hour partition columns."""
-    ts = _col(ts_col)
-    return (
-        df.withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
-        .withColumn("hour", F.hour(ts))
     )
 
 

@@ -1,1 +1,1 @@
-from .tables import load_table, load_tables, TABLE_NAMES  # noqa: F401
+from .tables import load_table, TABLE_NAMES  # noqa: F401

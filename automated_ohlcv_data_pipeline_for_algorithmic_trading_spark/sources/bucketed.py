@@ -13,9 +13,10 @@ Build-once mechanics under Spark's default in-memory catalog: the
 bucketed FILES survive on disk (bucket ids are encoded in file names),
 but catalog entries do not survive a session — so `ensure_bucketed`
 re-registers existing files with a metadata-only
-`CREATE TABLE ... CLUSTERED BY ... LOCATION` when it finds the build
-marker, and only pays the bucketed write when the source changed
-(size+mtime key, the `_ann_index_dir` staleness recipe). On a real
+`CREATE TABLE ... CLUSTERED BY ... LOCATION` when it finds the built
+layout, and only pays the bucketed write when the source or the bucket
+spec changed (`sources/persisted.artifact_dir`: source size+mtime plus
+a digest of key, bucket count and schema). On a real
 deployment a persistent metastore (Hive/Glue/Unity) makes the
 re-registration unnecessary; the write-once layout contract is
 identical.
@@ -28,10 +29,11 @@ physical-layout decision, applied to the lake itself.
 from __future__ import annotations
 
 import os
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .persisted import WAREHOUSE, artifact_dir, build_once
 
 __all__ = ["ensure_bucketed", "write_bucketed", "read_table"]
 
@@ -59,15 +61,9 @@ def write_bucketed(
 def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
-_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "spark-warehouse",
-    "bucketed",
-)
 
-
-def _safe(s: str) -> str:
-    return re.sub(r"[^A-Za-z0-9_]", "_", s)
+#: the warehouse area that holds every ``ensure_bucketed`` layout
+_ROOT = os.path.join(WAREHOUSE, "bucketed")
 
 
 def _register(
@@ -99,84 +95,47 @@ def ensure_bucketed(
     n_buckets: int = 8,
 ) -> DataFrame:
     """Return ``df``'s rows as a bucketed-by-``key`` table, building the
-    layout once per source version.
+    layout once per source version and bucket spec.
 
     ``source_path`` is the file whose (size, mtime) keys the layout —
-    a regenerated source can never be read through stale buckets. The
-    bucketed write itself is the one-time shuffle; every later call
-    (same or new session) is metadata-only. Concurrency-safe: the
-    build happens in a process-private temp directory that is renamed
-    into place atomically, so a concurrent reader either sees the
-    complete layout (with its `_BUILT` marker) or none of it — never a
-    half-written directory. Stale layouts of the SAME source (older
-    size+mtime tags, e.g. after testdata regeneration) are pruned when
-    a new version is built, so the warehouse does not grow without
-    bound across rounds.
+    a regenerated source can never be read through stale buckets — and
+    ``key``, ``n_buckets`` and ``df``'s schema are its build parameters,
+    so another spec is another layout, never the old files re-registered
+    under a wrong bucket count. The layout directory's name is also the
+    table name. The bucketed write itself is the one-time shuffle; every
+    later call (same or new session) is metadata-only. The write goes
+    through ``persisted.build_once``: concurrent readers see the
+    complete layout or none of it, and building a new version prunes
+    the superseded layouts of the same source.
     """
-    st = os.stat(source_path)
-    base = os.path.basename(source_path).split(".")[0]
-    prefix = _safe(
-        "{}_{}".format(
-            base,
-            os.path.basename(os.path.normpath(os.path.dirname(source_path))),
-        )
-    )
-    tag = _safe("{}_{}_{}".format(prefix, st.st_size, int(st.st_mtime)))
-    name = f"bkt_{tag}"
-    path = os.path.join(_ROOT, name)
-    marker = os.path.join(path, "_BUILT")
+    from pyspark.sql import functions as F
+
     schema_ddl = df.schema.toDDL()
+    path = artifact_dir(
+        "bucketed",
+        "bkt_" + os.path.basename(source_path).split(".")[0],
+        source_path,
+        {"key": key, "n_buckets": n_buckets, "schema": schema_ddl},
+    )
+    name = os.path.basename(path)
     if not spark.catalog.tableExists(name):
-        if os.path.exists(marker):
-            # files exist from an earlier session: metadata-only
-            # re-registration with the same bucket spec
-            _register(spark, name, path, schema_ddl, key, n_buckets)
-        else:
-            import shutil
 
-            from pyspark.sql import functions as F
-
+        def write(tmp: str) -> None:
             # one shuffle to align writer partitions with bucket ids
             # (same Murmur3 hash) -> exactly ONE file per bucket, which
             # is the layout Spark's SMJ planner can trust for BOTH
-            # exchange AND sort elimination. Built under a pid-private
-            # temp name, marked, then renamed into place — rename is
-            # the commit point; a losing racer just discards its copy.
+            # exchange AND sort elimination
             tmp_name = f"{name}__build{os.getpid()}"
-            tmp_path = os.path.join(_ROOT, tmp_name)
             (
                 df.repartition(n_buckets, F.col(key))
                 .write.mode("overwrite")
                 .bucketBy(n_buckets, key)
                 .sortBy(key)
-                .option("path", tmp_path)
+                .option("path", tmp)
                 .saveAsTable(tmp_name)
             )
-            with open(os.path.join(tmp_path, "_BUILT"), "w") as fh:
-                fh.write("ok\n")
             spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-            try:
-                os.rename(tmp_path, path)
-            except OSError:
-                # another process committed first — use theirs
-                shutil.rmtree(tmp_path, ignore_errors=True)
-            # GC: older layouts of this same source are unreachable
-            # (their size+mtime no longer matches) — drop them so
-            # regeneration across rounds doesn't accumulate full
-            # copies of fact tables under spark-warehouse/bucketed/.
-            # Match siblings STRICTLY as prefix + size + mtime: a bare
-            # startswith would also claim layouts of a DIFFERENT source
-            # whose sanitized prefix merely extends this one (e.g.
-            # 'sf1' vs 'sf1_v2' — likely, since _safe collapses
-            # punctuation to '_') and rmtree a layout another session's
-            # registered table still points at (round-10 ADVICE).
-            sib_pat = re.compile(
-                r"^bkt_" + re.escape(prefix) + r"_\d+_\d+$"
-            )
-            for sib in os.listdir(_ROOT):
-                if sib_pat.match(sib) and sib != name:
-                    shutil.rmtree(
-                        os.path.join(_ROOT, sib), ignore_errors=True
-                    )
-            _register(spark, name, path, schema_ddl, key, n_buckets)
+
+        build_once(path, write)
+        _register(spark, name, path, schema_ddl, key, n_buckets)
     return spark.table(name)

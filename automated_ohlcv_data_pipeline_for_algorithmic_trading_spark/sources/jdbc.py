@@ -34,10 +34,3 @@ def jdbc_writer(
         .option("batchsize", str(batchsize))
         .mode(mode)
     )
-
-
-def write_run_metadata_jdbc(metadata_df: DataFrame, url: str, table: str,
-                            user: str, password: str) -> None:
-    """Append the run ledger (plans.etl.run_metadata output). Requires a
-    reachable database and the JDBC driver jar on the classpath."""
-    jdbc_writer(metadata_df, url, table, user, password).save()

@@ -39,12 +39,6 @@ def read_raw_envelopes(
     )
 
 
-def parse_envelope_json(df: DataFrame, json_col: str) -> DataFrame:
-    """Parse a string column holding envelope JSON (e.g. from a message
-    bus) with the canonical schema."""
-    return df.withColumn("_env", F.from_json(F.col(json_col), RAW_ENVELOPE_SCHEMA))
-
-
 def write_raw_json(df: DataFrame, path: str) -> None:
     """S14 — bronze sink: append-only raw envelope JSON (the bronze zone
     is immutable history; dedup happens downstream, never by rewriting)."""

@@ -96,13 +96,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dtypes[c] == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Register each table as a temp view for the spark.sql surface."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

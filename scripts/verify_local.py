@@ -54,6 +54,31 @@ def frame_fingerprint(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
     return len(rows), h
 
 
+def _ledger_note(name: str, spark_hash: str, ledger: dict) -> tuple[str, bool]:
+    """How ``spark_hash`` compares with the committed ``SWEEP_HASHES.json``
+    entry of ``name`` (``ledger`` is that file's ``queries`` map):
+    ``ledger =``, ``ledger <new>!=<old>`` or ``ledger none`` (no entry),
+    and whether the result still equals the ledger."""
+    old = ledger.get(name, {}).get("spark_hash")
+    if old is None:
+        return "ledger none", True
+    if old == spark_hash:
+        return "ledger =", True
+    return f"ledger {spark_hash}!={old}", False
+
+
+def _committed_ledger(sf_dir: str) -> dict | None:
+    """The committed ledger's ``queries`` map, or None when it was swept
+    at another scale factor than ``sf_dir``."""
+    import json
+
+    with open(REPO / "SWEEP_HASHES.json") as fh:
+        swept = json.load(fh)
+    if Path(swept["sf_dir"]).name != Path(sf_dir).name:
+        return None
+    return swept["queries"]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -75,6 +100,8 @@ def main() -> int:
 
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    # a named run never rewrites the ledger, so it checks against it
+    committed = _committed_ledger(sf_dir) if only else None
     failures = []
     ledger: dict[str, dict] = {}
     for name, fn in qs.items():
@@ -121,10 +148,15 @@ def main() -> int:
         cols_ok = sorted(s_cols) == sorted(d_cols)
         ok = sn == dn and sh == dh and cols_ok
         ledger[name] = {"rows": sn, "spark_hash": sh, "oracle_hash": dh, "match": ok}
+        note = ""
+        if committed is not None:
+            note, in_ledger = _ledger_note(name, sh, committed)
+            note = f", {note}"
+            ok = ok and in_ledger
         status = "OK  " if ok else "FAIL"
         print(f"{status}  {name}: spark {sn} rows / duck {dn} rows, "
               f"hash {'=' if sh == dh else f'{sh}!={dh}'}, "
-              f"cols {'=' if cols_ok else f'{s_cols} != {d_cols}'} [{spark_t:.1f}s]")
+              f"cols {'=' if cols_ok else f'{s_cols} != {d_cols}'}{note} [{spark_t:.1f}s]")
         if not ok:
             failures.append(name)
             if sn == dn and cols_ok:

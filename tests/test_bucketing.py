@@ -48,9 +48,10 @@ def test_ensure_bucketed_reregistration_and_gc(spark, tmp_path):
     """Round-9 ADVICE (medium): the cross-session re-registration path
     must produce valid DDL for nested types and reserved column names —
     exercised here by dropping the catalog entry (what a new session
-    sees) and re-registering against the on-disk files. Also pins the
-    stale-layout GC: rebuilding after a source regeneration prunes the
-    old size+mtime sibling."""
+    sees) and re-registering against the on-disk files. A new bucket
+    count must build a new layout, not re-register the old one. Also
+    pins the stale-layout GC: rebuilding after a source regeneration
+    prunes the old size+mtime sibling."""
     import os
     import time
 
@@ -95,6 +96,15 @@ def test_ensure_bucketed_reregistration_and_gc(spark, tmp_path):
         .toString()
     )
     assert "Exchange" not in plan
+
+    # a changed bucket spec is a different layout: a fresh session that
+    # asks for 8 buckets must not re-register the 4-bucket files as 8
+    # (bucket pruning would then read the wrong file for a point lookup)
+    spark.sql(f"DROP TABLE `{name}`")
+    out8 = ensure_bucketed(spark, df, src, "k", n_buckets=8)
+    missed = [k for k in range(20) if out8.filter(F.col("k") == k).count() != 1]
+    assert missed == [], f"{len(missed)} of 20 point lookups missed their row"
+    name = next(iter(_ensure_tables(spark) - before))
 
     # GC: regenerate the source (new mtime -> new tag); the stale
     # layout directory must be pruned by the new build

@@ -204,6 +204,23 @@ def test_verify_local_imports_its_own_checkout(tmp_path):
     assert mod.REPO == root
 
 
+def test_verify_local_ledger_note():
+    """A named verify_local run compares each result with its committed
+    SWEEP_HASHES.json entry: equal, changed (a failure) or absent."""
+    import importlib.util
+    from pathlib import Path
+
+    script = Path(__file__).resolve().parents[1] / "scripts" / "verify_local.py"
+    spec = importlib.util.spec_from_file_location("verify_local_note", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    ledger = {"q": {"rows": 3, "spark_hash": "aaaa"}, "e": {"err": "spark: boom"}}
+    assert mod._ledger_note("q", "aaaa", ledger) == ("ledger =", True)
+    assert mod._ledger_note("q", "bbbb", ledger) == ("ledger bbbb!=aaaa", False)
+    assert mod._ledger_note("new", "bbbb", ledger) == ("ledger none", True)
+    assert mod._ledger_note("e", "bbbb", ledger) == ("ledger none", True)
+
+
 _CWD_PROBE = """
 import sys
 sys.path.insert(0, {repo!r})

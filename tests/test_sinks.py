@@ -28,11 +28,11 @@ from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.sources.raw_jso
 
 def test_overwrite_partitioned_rebuild_drops_stale_partitions(spark, tmp_path):
     """A ``mode("overwrite").partitionBy(...)`` write on the ``get_spark``
-    session replaces the whole directory. The persisted IVF and PQ index
-    rebuilds (``emb_ivf_probe`` writes ``assignments`` by ``cell``,
-    ``emb_pq_probe`` writes ``codes`` by ``sub``) rely on it: a rebuild
-    into a directory left by an earlier, partial build must not keep
-    that build's cells."""
+    session replaces the whole directory: a rebuild into a directory
+    left by an earlier, partial build must not keep that build's
+    partitions. (The persisted IVF and PQ indexes no longer depend on
+    it: ``sources/persisted.build_once`` writes every build into a fresh
+    directory.)"""
     out = str(tmp_path / "assignments")
     old = spark.range(60).select(
         F.col("id").alias("vec_id"), (F.col("id") % 3).cast("int").alias("cell")
