@@ -7992,9 +7992,9 @@ def d_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style head/middle/tail perplexity terciles over the corpus
     (Wenzek et al. 2020) — the bucketing stage of the CommonCrawl
     curation pipeline, with the corpus's own unigram LM standing in for
-    KenLM. Exact discrete terciles from a VALUE histogram (bounded by
-    the 1e-6 xent quantum, not doc count), two broadcast cut scalars,
-    no corpus-wide sort (operators/corpus.ccnet_buckets)."""
+    KenLM. Exact discrete terciles of the micro-unit xent: two cut
+    scalars read off the lazy distributed rank, broadcast to every doc,
+    no single-partition sort (operators/corpus.ccnet_buckets)."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.corpus import (
         ccnet_buckets,
     )
@@ -8254,8 +8254,9 @@ ORDER BY user_id
 def e_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation over the event stream: per-user
     recency / frequency / monetary quintiles (1 = lowest) via the exact
-    histogram-quantile operator — NO corpus-wide ntile sort; three
-    bounded VALUE histograms and broadcast cut scalars
+    order-statistic quantile operator — no single-partition ntile sort;
+    each cut is the ⌈N·b/5⌉-th smallest value, picked off the lazy
+    distributed rank, and all 12 cut scalars broadcast in one row
     (operators/quantiles.quantile_bucket)."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import (
         quantile_bucket,
@@ -8279,16 +8280,17 @@ def e_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "recency_days",
             F.datediff(F.col("_ref"), F.col("_last")).cast("long"),
         )
-        # three histogram aggregates + the final classify all consume
-        # this per-user table: cut the lineage once
+        # the three cut plans and the final classify all consume this
+        # per-user table: cut the lineage once
         .localCheckpoint()
     )
-    # recency is bounded by construction (distinct day-counts <= history
-    # span) -> lazy packed fold; frequency and monetary sums are
-    # row-count-shaped in distinct values -> distributed twopass
-    b = quantile_bucket(pu, "recency_days", 5, "r_bucket", strategy="packed")
-    b = quantile_bucket(b, "frequency", 5, "f_bucket", strategy="twopass")
-    b = quantile_bucket(b, "_mon", 5, "m_bucket", strategy="twopass")
+    # one call for all three: the cuts come from the same pu and attach
+    # in one broadcast cross join (chained calls would nest each earlier
+    # call's cross join inside the next call's cut plan)
+    b = quantile_bucket(
+        pu,
+        {"recency_days": "r_bucket", "frequency": "f_bucket", "_mon": "m_bucket"},
+    )
     return b.select(
         "user_id",
         "recency_days",
@@ -15153,9 +15155,10 @@ def d_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-length distribution report: exact discrete
     quantiles (p10/p25/p50/p75/p90) of the whitespace token count, per
     source — the first chart a corpus owner draws before setting Gopher
-    length cuts, and the grouped twin of the quantile_bucket packed
-    path: ONE sorted in-array pack per source (bounded by docs-per-
-    source), integer ceil positions, no interpolation, engine-exact."""
+    length cuts, and the grouped twin of quantile_bucket's order-
+    statistic cuts: ONE sorted in-array pack per source (bounded by
+    docs-per-source), integer ceil positions, no interpolation,
+    engine-exact."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.text import (
         tokens,
     )

@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .rank import distributed_running_sum
+from .quantiles import quantile_bucket
 from .text import token_ngrams, tokens
 
 
@@ -736,19 +736,12 @@ def ccnet_buckets(
     production pipeline would swap in KenLM scores, the bucketing
     algebra is identical.
 
-    Scale-right exact terciles WITHOUT a corpus-wide sort: per-doc
-    xent quantizes to micro-units, docs collapse to a VALUE HISTOGRAM
-    (distinct quantized xents — bounded by the value range over the
-    1e-6 quantum, ~1e7 rows max REGARDLESS of corpus size, not by doc
-    count), the cumulative count over that bounded table yields the two
-    discrete cut values (smallest xq whose cumulative count covers
-    ceil(N/3) / ceil(2N/3) — quantile_disc semantics, ties share a
-    bucket), and every doc classifies by comparison against the two
-    broadcast scalars. No window ever touches per-doc rows.
-
-    Exactness: the cut selection is pure integer arithmetic
-    (3·ccum >= N avoids any division); bucket labels are string
-    comparisons of exact BIGINTs — bit-identical cross-engine.
+    Exact terciles with no single-partition sort: per-doc xent
+    quantizes to micro-units (an exact BIGINT), and
+    ``quantiles.quantile_bucket`` cuts it at the ⌈N/3⌉-th and
+    ⌈2N/3⌉-th smallest value (quantile_disc semantics, ties share a
+    bucket, integer rank arithmetic); buckets 1/2/3 are
+    head/middle/tail. Bit-identical cross-engine.
 
     Output: (id_col, n_tokens, xent, bucket) — bucket in
     {'head','middle','tail'}.
@@ -756,34 +749,17 @@ def ccnet_buckets(
     x = unigram_xent(df, text_col, id_col).withColumn(
         "_xq", F.floor(F.col("xent") * F.lit(1e6) + F.lit(0.5)).cast("long")
     )
-    # histogram + cut values and the final classify both consume x:
-    # cut lineage once (same discipline as unigram_xent's dt)
+    # the cuts and the final classify both consume x: cut lineage once
+    # (same discipline as unigram_xent's dt)
     x = x.localCheckpoint()
-    hist = x.groupBy("_xq").agg(F.count(F.lit(1)).alias("_cnt"))
-    # two-pass distributed prefix sum over the bounded histogram
-    # (operators/rank.py) — the doc total N falls out of the offset
-    # fold as a literal, so the previous one-row total cross join is
-    # gone along with the ungrouped window
-    j = distributed_running_sum(
-        hist, [F.col("_xq").asc()], "_cnt", "_ccum", total_col="_n"
+    labels = F.element_at(
+        F.array(F.lit("head"), F.lit("middle"), F.lit("tail")), F.col("_b")
     )
-    c1 = j.filter(F.col("_ccum") * 3 >= F.col("_n")).agg(
-        F.min("_xq").alias("_c1")
-    )
-    c2 = j.filter(F.col("_ccum") * 3 >= F.col("_n") * 2).agg(
-        F.min("_xq").alias("_c2")
-    )
-    cuts = c1.crossJoin(c2)
-    bucket = (
-        F.when(F.col("_xq") <= F.col("_c1"), F.lit("head"))
-        .when(F.col("_xq") <= F.col("_c2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-    )
-    return x.crossJoin(F.broadcast(cuts)).select(
+    return quantile_bucket(x, {"_xq": "_b"}, 3).select(
         F.col(id_col),
         F.col("n_tokens"),
         F.col("xent"),
-        bucket.alias("bucket"),
+        labels.alias("bucket"),
     )
 
 

@@ -370,6 +370,31 @@ def _expand_member_pairs(withg: DataFrame, rep_pairs: DataFrame) -> DataFrame:
     return intra.unionByName(cross)
 
 
+def _union_find_min(edges) -> dict:
+    """Driver union-find over ``(a, b)`` edges: map every vertex to the
+    minimum vertex of its connected component (union by MIN root, path
+    compression). Vertices must be non-NULL and mutually orderable."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {v: find(v) for v in parent}
+
+
 def minhash_dup_decisions(
     df: DataFrame,
     text_col: str = "text",
@@ -432,28 +457,8 @@ def minhash_dup_decisions(
             extend_until_converged=True,
             small_graph_max_edges=small_graph_max_edges,
         )
-    # driver union-find over the rep graph, union by MIN id so every
-    # root is its component's minimum group id (= minimum member id)
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in rep_rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
+    # every root is its component's minimum group id (= minimum member id)
+    keeper = _union_find_min(rep_rows)
     spark = df.sparkSession
     id_type = withg.schema["_gid"].dataType
     map_schema = StructType(
@@ -462,9 +467,7 @@ def minhash_dup_decisions(
             StructField("_rep_keeper", id_type, False),
         ]
     )
-    rep_map = spark.createDataFrame(
-        [(g, find(g)) for g in parent], map_schema
-    )
+    rep_map = spark.createDataFrame(list(keeper.items()), map_schema)
     # group size via one narrow (id, gid, sz) window — no driver
     # transfer, no array columns; withg is already checkpointed.
     # _m counts NON-NULL member ids and NULL-id members are filtered
@@ -770,40 +773,17 @@ def near_dup_components(
         # min-within-`rounds`-hops, which the unrolled SQL oracle
         # replays — union-find would overshoot on long chains.)
         # The fast path must preserve the INPUT id type (string doc ids
-        # are as legitimate as longs) and must not see NULL ids (find()
-        # cannot order them; the distributed equi-join loop simply never
-        # connects them). Both checks ride the same tiny-edge-set scan.
-        n_edges = pairs.count()
-        has_null_ids = (
-            pairs.filter(
-                F.col(id_a).isNull() | F.col(id_b).isNull()
-            ).limit(1).count()
-            > 0
+        # are as legitimate as longs) and must not see NULL ids (the
+        # union-find cannot order them; the distributed equi-join loop
+        # simply never connects them). One bounded collect decides both
+        # (an incremental limit: 1 + ~log4(partitions) jobs).
+        edge_rows = (
+            pairs.select(id_a, id_b).limit(small_graph_max_edges + 1).collect()
         )
-        if n_edges <= small_graph_max_edges and not has_null_ids:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for r in pairs.select(id_a, id_b).collect():
-                a, b = r[0], r[1]
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by MIN id so every root is its component min
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            rows = [(v, find(v)) for v in parent]
+        if len(edge_rows) <= small_graph_max_edges and not any(
+            a is None or b is None for a, b in edge_rows
+        ):
+            rows = list(_union_find_min(edge_rows).items())
             id_type = pairs.schema[id_a].dataType
             out_schema = StructType(
                 [

@@ -47,6 +47,10 @@ BNLJ_ALLOWLIST: dict[str, str] = {
     ),
     "e_benford_digits": "one-row total scalar",
     "d_ccnet_buckets": "one-row quantile cut scalars",
+    "d_quality_fusion": (
+        "one-row corpus-total scalar (its unigram_xent stage, visible"
+        " since the rank stopped checkpointing its input)"
+    ),
     "e_rfm_segments": "one-row quantile cut scalars",
     "e_value_histogram": "one-row min-max bounds",
     "e_pareto_share": "one-row grand-total bound",

@@ -360,7 +360,7 @@ class TestQuantileBucket:
         from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import quantile_bucket
 
         df = spark.createDataFrame([Row(id=i, v=i) for i in range(1, 101)])
-        out = quantile_bucket(df, "v", 5, "b").collect()
+        out = quantile_bucket(df, {"v": "b"}, 5).collect()
         sizes = {}
         for r in out:
             sizes[r.b] = sizes.get(r.b, 0) + 1
@@ -374,7 +374,7 @@ class TestQuantileBucket:
         df = spark.createDataFrame(
             [Row(id=i, v=0) for i in range(60)] + [Row(id=100 + i, v=i + 1) for i in range(40)]
         )
-        out = quantile_bucket(df, "v", 5, "b").collect()
+        out = quantile_bucket(df, {"v": "b"}, 5).collect()
         zeros = {r.b for r in out if r.v == 0}
         assert zeros == {1}  # all ties in one bucket
 
@@ -383,8 +383,8 @@ class TestQuantileBucket:
         from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import quantile_bucket
 
         df = spark.createDataFrame([Row(id=i, v=(i * 7919) % 97) for i in range(200)])
-        a = sorted((r.id, r.b) for r in quantile_bucket(df.coalesce(1), "v", 4, "b").collect())
-        b = sorted((r.id, r.b) for r in quantile_bucket(df.repartition(16), "v", 4, "b").collect())
+        a = sorted((r.id, r.b) for r in quantile_bucket(df.coalesce(1), {"v": "b"}, 4).collect())
+        b = sorted((r.id, r.b) for r in quantile_bucket(df.repartition(16), {"v": "b"}, 4).collect())
         assert a == b
 
 

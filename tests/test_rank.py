@@ -199,55 +199,11 @@ def test_rank_parity_under_physical_configs(spark, perturb):
         assert all(r[1] == r[2] for r in got)
 
 
-def test_running_sum_parity_random(spark):
-    """distributed_running_sum == the ungrouped cumulative window, bit
-    for bit, on a distinct-keyed table (the histogram shape every
-    in-repo caller feeds it)."""
-    rng = random.Random(11)
-    rows = [(k, rng.randint(-5, 100)) for k in range(1500)]
-    df = spark.createDataFrame(rows, "k long, v long")
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
-        distributed_running_sum,
-    )
-
-    got = distributed_running_sum(
-        df, [F.col("k").asc()], "v", "_cs", num_partitions=7, total_col="_n"
-    )
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    want = df.withColumn("_cs", F.sum("v").over(w).cast("long"))
-    mismatches = (
-        got.select("k", F.col("_cs").alias("g"))
-        .join(want.select("k", F.col("_cs").alias("w")), "k")
-        .filter(F.col("g") != F.col("w"))
-        .count()
-    )
-    assert mismatches == 0
-    total = sum(v for _, v in rows)
-    assert got.select("_n").distinct().collect() == [(total,)]
-
-
-def test_running_sum_empty(spark):
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
-        distributed_running_sum,
-    )
-
-    df = spark.createDataFrame([], "k long, v long")
-    out = distributed_running_sum(
-        df, [F.col("k").asc()], "v", "_cs", total_col="_n"
-    )
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["k", "v", "_cs", "_n"]
-
-
 def test_no_unpartitioned_window_in_plan(spark):
-    """The structural point of the distributed helpers: the physical plan
+    """The structural point of the distributed rank: the physical plan
     must contain no ungrouped WindowExec (the 'No Partition Defined'
     shape that collapses data to one task) and no single-partition
     exchange."""
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.rank import (
-        distributed_running_sum,
-    )
-
     # k is a permutation of id: a plain alias of spark.range's id would
     # let the optimizer drop the sort (Range output is already ordered)
     df = spark.range(100).select(
@@ -256,9 +212,3 @@ def test_no_unpartitioned_window_in_plan(spark):
     _assert_distributed_rank_plan(
         _executed_plan(distributed_row_number(df, [F.col("k").asc()], "_rk"))
     )
-    plan = _executed_plan(distributed_running_sum(df, [F.col("k").asc()], "v", "_cs"))
-    assert "SinglePartition" not in plan, plan
-    for line in plan.splitlines():
-        if "Window" in line:
-            # every WindowExec must carry a partition spec
-            assert "__dr_pid" in line, line

@@ -3,9 +3,26 @@ freshness row, regime-conditional smoother (16th fold family)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 import __spark_entry__ as E
+
+
+@contextlib.contextmanager
+def _conf(spark, settings: dict):
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_emb_drift_recall_shifted_distribution(spark, sf_dir):
@@ -277,35 +294,123 @@ def test_stream_kmv_batching_independence(spark, sf_dir):
     assert streamed == batch and streamed
 
 
-def test_quantile_bucket_strategies_agree(spark):
-    """The round-10 ADVICE fix made 'twopass' the default and 'packed'
-    opt-in — both must produce IDENTICAL buckets (same integer cut
-    rule) on adversarial tie-heavy data."""
+#: ROADMAP's physical-config perturbations that apply to the cut path
+_QB_CONFIGS = {
+    "default": {},
+    "shuffle_1": {"spark.sql.shuffle.partitions": "1"},
+    "shuffle_37_uncoalesced": {
+        "spark.sql.shuffle.partitions": "37",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    },
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+
+
+def _py_quantile_buckets(vals, k):
+    """The cut rule straight from its definition: cut_b is the smallest
+    value v whose cumulative count ccum(v) satisfies ccum·k >= N·b over
+    the non-NULL values; bucket = 1 + #cuts below the value."""
+    from collections import Counter
+
+    hist = Counter(v for v in vals if v is not None)
+    n = sum(hist.values())
+    cuts = []
+    for b in range(1, k):
+        ccum = 0
+        for v in sorted(hist):
+            ccum += hist[v]
+            if ccum * k >= n * b:
+                cuts.append(v)
+                break
+    return [
+        None if v is None else 1 + sum(v > c for c in cuts) for v in vals
+    ]
+
+
+@pytest.mark.parametrize("config", sorted(_QB_CONFIGS))
+def test_quantile_bucket_matches_python_cut_rule(spark, config):
+    """quantile_bucket equals the pure-Python cut rule on tie-heavy,
+    negative, DECIMAL(38,0), all-NULL and empty columns, k in {2, 3, 5},
+    in multi-column calls, under each physical config."""
     import random
+    from decimal import Decimal
 
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import (
         quantile_bucket,
     )
 
     rnd = random.Random(7)
-    for trial in range(3):
-        vals = [rnd.choice([1, 2, 3, 5, 8, 13, 21]) for _ in range(200)] + [
-            rnd.randrange(0, 10**6) for _ in range(50)
-        ]
-        df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vals)], "id int, v long"
-        )
-        for k in (2, 4, 5):
-            a = {
-                r["id"]: r["b"]
-                for r in quantile_bucket(
-                    df, "v", k, "b", strategy="twopass"
-                ).collect()
-            }
-            b = {
-                r["id"]: r["b"]
-                for r in quantile_bucket(
-                    df, "v", k, "b", strategy="packed"
-                ).collect()
-            }
-            assert a == b, (trial, k)
+    n = 250
+    cols = {
+        "ties": [rnd.choice([1, 2, 3, 5, 8, 13, 21]) for _ in range(200)]
+        + [rnd.randrange(0, 10**6) for _ in range(50)],
+        "neg": [
+            None if i % 17 == 0 else rnd.randint(-50, 50) for i in range(n)
+        ],
+        "dec": [
+            Decimal(rnd.choice([-1, 1]) * rnd.randrange(10**37))
+            if i % 5
+            else Decimal(-(10**37))
+            for i in range(n)
+        ],
+        "nul": [None] * n,
+    }
+    rows = [(i, *(cols[c][i] for c in cols)) for i in range(n)]
+    schema = "id int, ties long, neg long, dec decimal(38,0), nul long"
+    df = spark.createDataFrame(rows, schema)
+    empty = spark.createDataFrame([], schema)
+    calls = [(df, list(cols), k) for k in (2, 3, 5)]
+    calls.append((empty, ["ties", "dec"], 3))
+    with _conf(spark, _QB_CONFIGS[config]):
+        for frame, names, k in calls:
+            out = quantile_bucket(frame, {c: f"b_{c}" for c in names}, k)
+            assert out.columns == frame.columns + [f"b_{c}" for c in names]
+            got = {r["id"]: r for r in out.collect()}
+            if frame is empty:
+                assert got == {}
+                continue
+            for c in names:
+                want = _py_quantile_buckets(cols[c], k)
+                assert [got[i][f"b_{c}"] for i in range(n)] == want, (
+                    config, c, k
+                )
+
+
+def test_quantile_bucket_runs_no_job_when_called(spark):
+    """The cut path is a plan transformation: calling quantile_bucket
+    (and planning its result) fires no Spark job."""
+    import uuid
+
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import (
+        quantile_bucket,
+    )
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    df = spark.range(3000).select(
+        "id", (F.col("id") % 13).alias("a"), (F.col("id") * 7 % 101).alias("b")
+    )
+    group = f"qb-lazy-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "quantile_bucket laziness")
+    try:
+        out = quantile_bucket(df, {"a": "qa", "b": "qb"}, 4)
+        out._jdf.queryExecution().executedPlan()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out.filter(F.col("qa").isNull()).count() == 0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_quantile_bucket_rejects_fewer_than_two_buckets(spark):
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.quantiles import (
+        quantile_bucket,
+    )
+
+    df = spark.createDataFrame([(1,)], "v long")
+    with pytest.raises(ValueError, match="n_buckets"):
+        quantile_bucket(df, {"v": "b"}, 1)

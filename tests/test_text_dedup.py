@@ -609,6 +609,32 @@ def test_near_dup_components_null_ids_skip_fast_path(spark):
     assert out[9] == 9
 
 
+@pytest.mark.parametrize("n_parts,max_jobs", [(4, 3), (32, 5)])
+def test_near_dup_components_fast_path_probes_once(spark, n_parts, max_jobs):
+    """The converged fast path reads its checkpointed edges with ONE
+    bounded ``limit(max + 1).collect()`` (Spark's incremental take: 1 +
+    ~log4(partitions) jobs) instead of a count, a NULL-id probe and a
+    collect. With the pair checkpoint, the call runs 3 jobs at 4 input
+    partitions and 5 at 32; the three separate probes made it 6 at
+    both."""
+    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
+        near_dup_components,
+    )
+
+    # chains of 4 ids: (4i, 4i+1), (4i+1, 4i+2), (4i+2, 4i+3); spark.range
+    # gives the partition count without a shuffle
+    a = F.expr("id + id div 3")
+    pairs = spark.range(0, 300, 1, n_parts).select(
+        a.alias("doc_a"), (a + 1).alias("doc_b")
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    out = near_dup_components(pairs, extend_until_converged=True)
+    assert sched.numTotalJobs() - before <= max_jobs
+    got = {r["doc_id"]: r["keeper_id"] for r in out.collect()}
+    assert got == {v: v - v % 4 for v in range(400)}
+
+
 class TestMinhashRecall:
     def test_detected_is_subset_of_truth_and_recall_bounded(self, spark):
         """The recall report's invariant: the LSH path exact-verifies its
