@@ -2727,13 +2727,13 @@ FROM verified WHERE j >= {threshold} ORDER BY new_id, index_id
 
 
 def d_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pair graph -> dedup DECISIONS: connected components via
-    min-label propagation (iterative DataFrame joins with checkpointing)
-    run to CONVERGENCE (extend_until_converged — no fixed round budget
-    that a longer-chained corpus could silently outgrow), keeper = the
-    component-minimum doc id. Pairs come from the MinHash-LSH path; the
-    converged fixed point is round-count independent, so the oracle is a
-    WITH RECURSIVE reachability query (min label over each vertex's
+    """Near-dup pair graph -> dedup DECISIONS: connected components run to
+    CONVERGENCE over the distinct-set rep graph (driver union-find under
+    the edge bound, distributed pointer jumping above it — no round
+    budget that a longer-chained corpus could silently outgrow), keeper
+    = the component-minimum doc id. Pairs come from the MinHash-LSH path;
+    the converged fixed point is round-count independent, so the oracle
+    is a WITH RECURSIVE reachability query (min label over each vertex's
     reachable set) — exact for any component diameter."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         minhash_dup_decisions,
@@ -12319,7 +12319,7 @@ def _dup_components_persisted(
     spark: SparkSession, sf_dir: str, threshold: float = 0.95
 ) -> DataFrame:
     """Converged dedup decisions (doc_id, keeper_id) as a PERSISTED
-    artifact: the minhash-pairs + pointer-jumping chain runs only when
+    artifact: the minhash + connected-components chain runs only when
     the on-disk parquet is missing or its source changed
     (``sources/persisted.build_once``); every downstream report reads
     the stored table. This is how the decision set works at 100 TB —

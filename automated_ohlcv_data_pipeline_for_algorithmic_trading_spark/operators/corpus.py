@@ -465,7 +465,6 @@ def _bpe_fit(
         merges, seq_rows = _bpe_fit_driver(
             [(r["w"], r["cnt"]) for r in probe], rounds
         )
-        words.unpersist()
         return (
             spark.createDataFrame(
                 merges, "round int, lhs string, rhs string, freq long"
@@ -481,7 +480,6 @@ def _bpe_fit(
             "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
         ).alias("syms"),
     ).localCheckpoint()
-    words.unpersist()  # seq supersedes the vocab checkpoint
     merges: list[tuple[int, str, str, int]] = []
     # the iteration runs over the vocabulary — far below one shuffle
     # partition of work — so pin its shuffles to a handful of tasks

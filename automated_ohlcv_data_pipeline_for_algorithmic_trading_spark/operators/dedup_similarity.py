@@ -408,8 +408,8 @@ def minhash_dup_decisions(
 ) -> DataFrame:
     """Converged dedup decisions ``(doc_id, keeper_id)`` straight from the
     DISTINCT-SET level — the exact fixed point of
-    ``near_dup_components(minhash_near_dup_pairs(df), extend_until_converged
-    =True)`` without ever materializing the member-level pair expansion.
+    ``near_dup_components(minhash_near_dup_pairs(df))`` without ever
+    materializing the member-level pair expansion.
 
     Why this is the same answer: every set-group is a clique at the
     member level (identical token sets, Jaccard 1.0 between any two
@@ -424,57 +424,34 @@ def minhash_dup_decisions(
     Why it scales better: the member expansion materializes C(m, 2) rows
     per m-replica group (quadratic in replica count — the exact blow-up
     the rep-level machinery exists to avoid) only for the components step
-    to collapse them back. Here the components run on the REP graph,
-    whose size tracks distinct-content near-dup density, and membership
-    is attached with one broadcast of the (group -> keeper) map.
+    to collapse them back. Here :func:`near_dup_components` runs on the
+    REP graph, whose size tracks distinct-content near-dup density, and
+    membership is attached with one broadcast of the (group -> keeper)
+    map. ``small_graph_max_edges`` is passed through: above it the rep
+    graph takes the distributed components loop.
 
     Vertex contract (matches the member-level path exactly): a doc gets a
     decision row iff it appears in >= 1 member pair, i.e. its group has
     m >= 2 members with a nonempty token set (intra clique) OR its group
     touches a verified rep pair (cross edges; rep pairs imply nonempty
     sets). Everything else is absent from the output, exactly as before.
-
-    Falls back to the member-level path when the rep graph exceeds
-    ``small_graph_max_edges`` (same bounded-collect class and bound as
-    :func:`near_dup_components`'s driver fast path) or carries NULL ids.
     """
     withg, rep_pairs = minhash_group_rep_pairs(
         df, text_col, id_col, threshold, k, bands, rows, tokens_col
     )
-    # materialize the rep graph BEFORE the bounded probe: the probe's
-    # limit().collect() executes the full LSH candidate+verify pipeline
-    # anyway, and without the checkpoint the fallback path re-ran it all
-    # from the withg checkpoint a second time (round-12 ADVICE)
-    rep_pairs = rep_pairs.localCheckpoint()
-    rep_rows = (
-        rep_pairs.select("_ga", "_gb").limit(small_graph_max_edges + 1).collect()
-    )
-    if len(rep_rows) > small_graph_max_edges or any(
-        r[0] is None or r[1] is None for r in rep_rows
-    ):
-        return near_dup_components(
-            _expand_member_pairs(withg, rep_pairs),
-            extend_until_converged=True,
-            small_graph_max_edges=small_graph_max_edges,
-        )
-    # every root is its component's minimum group id (= minimum member id)
-    keeper = _union_find_min(rep_rows)
-    spark = df.sparkSession
-    id_type = withg.schema["_gid"].dataType
-    map_schema = StructType(
-        [
-            StructField("_gid", id_type, False),
-            StructField("_rep_keeper", id_type, False),
-        ]
-    )
-    rep_map = spark.createDataFrame(list(keeper.items()), map_schema)
+    # every keeper is its component's minimum group id (= minimum member id)
+    rep_map = near_dup_components(
+        rep_pairs,
+        id_a="_ga",
+        id_b="_gb",
+        small_graph_max_edges=small_graph_max_edges,
+    ).select(F.col("doc_id").alias("_gid"), F.col("keeper_id").alias("_rep_keeper"))
     # group size via one narrow (id, gid, sz) window — no driver
     # transfer, no array columns; withg is already checkpointed.
     # _m counts NON-NULL member ids and NULL-id members are filtered
     # out: a NULL id never survives the member-level path's
     # doc_a < doc_b pair predicate, so it must neither emit a decision
-    # row nor count as a pairing partner here (round-12 ADVICE — the
-    # near_dup_components NULL discipline).
+    # row nor count as a pairing partner here.
     m = F.count("_id").over(Window.partitionBy("_gid"))
     members = withg.select("_id", "_gid", "_sz").withColumn("_m", m)
     return (
@@ -617,8 +594,6 @@ def simhash_near_dup_pairs(
     the exact-pigeonhole guarantee.
     """
     sk = simhash_sketch(df, text_col, id_col, bits=bits)
-    cw = bits // 4  # chunk width in bits
-    cmask = (1 << cw) - 1
     if bucketed:
         # both sides of the self-join consume the sketch table; without
         # materialization lineage recomputes the token explode twice
@@ -703,44 +678,36 @@ def hamming_near_dup_pairs(
     )
 
 
+#: Distributed components loop bounds: pointer jumping converges in
+#: ~log2(diameter) rounds, and a label table of up to this many rows
+#: (tens of MB) is broadcast to the edges each round instead of
+#: shuffling the edge set.
+COMPONENTS_MAX_ROUNDS = 20
+COMPONENTS_BROADCAST_MAX_LABELS = 1_000_000
+
+
 def near_dup_components(
     pairs: DataFrame,
-    rounds: int = 3,
     id_a: str = "doc_a",
     id_b: str = "doc_b",
-    extend_until_converged: bool = False,
-    max_rounds: int = 20,
-    broadcast_max_labels: int = 1_000_000,
     small_graph_max_edges: int = 1_000_000,
 ) -> DataFrame:
-    """Canonical-keeper selection over the near-dup pair graph: every doc
-    appearing in ``pairs`` gets a ``keeper_id`` — the minimum doc id
-    reachable within ``rounds`` hops (iterative min-label propagation).
+    """Canonical-keeper selection over the near-dup pair graph: every id
+    appearing in ``pairs`` gets a ``keeper_id`` — the minimum id of its
+    connected component, the exact converged fixed point for any
+    component diameter. Output: (doc_id, keeper_id) in the input id type.
 
     This is the step that turns PAIRS into DEDUP DECISIONS: keep
-    ``keeper_id``, drop the rest of the component. DataFrame-only
-    iteration — each round is one equi-join + min-aggregate, labels are
-    localCheckpoint'd so plans stay shallow (the standard checkpoint
-    discipline for iterative algorithms at scale). Near-dup clusters are
-    quasi-cliques (tiny diameter), so small ``rounds`` reaches the fixed
-    point in practice; because the round count is FIXED, the whole
-    computation replays as unrolled SQL — see ``_components_sql`` in
-    __spark_entry__ (most engines cannot oracle-check iterative graph
-    algorithms at all). Output: (doc_id, keeper_id).
+    ``keeper_id``, drop the rest of the component. The oracle is the
+    ``WITH RECURSIVE`` reachability query ``_components_sql`` in
+    __spark_entry__ (min label over each vertex's reachable set).
 
-    Convergence guard: every round records whether any label still
-    changed.  With ``extend_until_converged=True`` the iteration keeps
-    going past ``rounds`` (bounded by ``max_rounds``) until a round
-    changes nothing — the exact-components mode for graphs with long
-    chains.  In fixed-round mode (the SQL-replayable registry variant) a
-    still-changing final round raises a ``RuntimeWarning`` instead of
-    silently splitting components.
-
-    Converged mode takes a driver union-find FAST PATH while the edge
-    set fits ``small_graph_max_edges`` (near-dup edges scale with dup
-    density, not corpus size — the bounded-collect class); the result
-    is the identical fixed point. The distributed pointer-jumping loop
-    remains the path for bigger graphs.
+    While the edge set fits ``small_graph_max_edges`` and carries no NULL
+    id, one bounded collect feeds a driver union-find (near-dup edges
+    scale with dup density, not corpus size — the bounded-collect
+    class). Otherwise a distributed min-label propagation with pointer
+    jumping runs until a round changes nothing (at most
+    ``COMPONENTS_MAX_ROUNDS``); a NULL endpoint is never connected.
     """
     # The pair set is tiny (near-dup edges) but its lineage is the whole
     # LSH pipeline; verts/edges/rounds reference it 4+ times, so cut the
@@ -754,44 +721,34 @@ def near_dup_components(
     # this only if a single partition of labels stops fitting in memory.
     spark = pairs.sparkSession
     pairs = pairs.localCheckpoint()
-    if extend_until_converged:
-        # Small-graph fast path: near-dup edge sets are tiny relative to
-        # the corpus (edges grow with DUP DENSITY, not corpus size), and
-        # the distributed loop pays ~0.5-1 s of scheduling per round
-        # (2 joins + 2 checkpoints + a convergence probe) even when the
-        # label table is a few thousand rows. Below the bound, collect
-        # the edges once and run min-root union-find on the driver —
-        # the SAME fixed point (every vertex -> min id in its connected
-        # component) the converged loop reaches, in one action instead
-        # of ~4 rounds x 4 jobs. 1M edges = ~16 MB of longs on the
-        # driver — the same bounded-collect class as the 1M-label
-        # broadcast above (the 10x-replica sf1 graph is 691k edges and
-        # took the distributed loop at the old 200k bound: 92 s vs
-        # ~15 s through the fast path); above it the
-        # distributed pointer-jumping loop below scales to any graph.
-        # (Fixed-round mode never takes this path: its contract is
-        # min-within-`rounds`-hops, which the unrolled SQL oracle
-        # replays — union-find would overshoot on long chains.)
-        # The fast path must preserve the INPUT id type (string doc ids
-        # are as legitimate as longs) and must not see NULL ids (the
-        # union-find cannot order them; the distributed equi-join loop
-        # simply never connects them). One bounded collect decides both
-        # (an incremental limit: 1 + ~log4(partitions) jobs).
-        edge_rows = (
-            pairs.select(id_a, id_b).limit(small_graph_max_edges + 1).collect()
+    # Small-graph fast path: the distributed loop pays ~0.5-1 s of
+    # scheduling per round (2 joins + 2 checkpoints + a convergence
+    # probe) even when the label table is a few thousand rows. Below the
+    # bound, collect the edges once and run min-root union-find on the
+    # driver — the SAME fixed point in one action instead of ~4 rounds x
+    # 4 jobs. 1M edges = ~16 MB of longs on the driver, the same
+    # bounded-collect class as the 1M-label broadcast below (the
+    # 10x-replica sf1 graph is 691k edges and took the distributed loop
+    # at the old 200k bound: 92 s vs ~15 s through the fast path).
+    # The fast path must preserve the INPUT id type (string doc ids are
+    # as legitimate as longs) and must not see NULL ids (the union-find
+    # cannot order them; the distributed equi-join loop simply never
+    # connects them). One bounded collect decides both (an incremental
+    # limit: 1 + ~log4(partitions) jobs).
+    edge_rows = pairs.select(id_a, id_b).limit(small_graph_max_edges + 1).collect()
+    if len(edge_rows) <= small_graph_max_edges and not any(
+        a is None or b is None for a, b in edge_rows
+    ):
+        id_type = pairs.schema[id_a].dataType
+        out_schema = StructType(
+            [
+                StructField("doc_id", id_type, False),
+                StructField("keeper_id", id_type, False),
+            ]
         )
-        if len(edge_rows) <= small_graph_max_edges and not any(
-            a is None or b is None for a, b in edge_rows
-        ):
-            rows = list(_union_find_min(edge_rows).items())
-            id_type = pairs.schema[id_a].dataType
-            out_schema = StructType(
-                [
-                    StructField("doc_id", id_type, False),
-                    StructField("keeper_id", id_type, False),
-                ]
-            )
-            return spark.createDataFrame(rows, out_schema)
+        return spark.createDataFrame(
+            list(_union_find_min(edge_rows).items()), out_schema
+        )
     n_part = max(2, min(8, spark.sparkContext.defaultParallelism // 4))
     pairs = pairs.repartition(n_part)
     va = pairs.select(F.col(id_a).alias("v"))
@@ -809,13 +766,12 @@ def near_dup_components(
     # broadcast, ship labels to the edges instead of shuffling the edge
     # set every round: each iteration becomes broadcast-join +
     # map-side-combined min, no wide exchange (measured ~40% off the
-    # propagation at sf0.1). Above the threshold (default 1M labels
-    # ~ tens of MB — two explicit broadcasts per round must fit the
-    # driver comfortably) fall back to the shuffle join, which scales to
-    # any vertex count.
-    bcast = verts.count() <= broadcast_max_labels
+    # propagation at sf0.1). Above the bound (two explicit broadcasts per
+    # round must fit the driver comfortably) fall back to the shuffle
+    # join, which scales to any vertex count.
+    bcast = verts.count() <= COMPONENTS_BROADCAST_MAX_LABELS
 
-    def _one_round(labels: DataFrame, jump: bool = False) -> DataFrame:
+    def _one_round(labels: DataFrame) -> DataFrame:
         lab_n = labels.select(F.col("v").alias("n"), F.col("label").alias("nl"))
         if bcast:
             lab_n = F.broadcast(lab_n)
@@ -828,20 +784,16 @@ def near_dup_components(
                 F.col("label"), F.coalesce(F.col("nm"), F.col("label"))
             ).alias("label"),
             # did this round improve the label? (null nm -> no edge
-            # row -> unchanged); drives the convergence guard below
+            # row -> unchanged); drives the convergence check below
             F.coalesce(F.col("nm") < F.col("label"), F.lit(False)).alias(
                 "_chg"
             ),
         )
-        if not jump:
-            return stepped.localCheckpoint()
-        # pointer jumping (converged mode only — fixed-round mode keeps
-        # the plain one-hop-per-round semantics its unrolled SQL replay
-        # documents): label <- label(label). Labels are always vertex
-        # ids inside the component, so the hop stays within it and only
-        # accelerates — plain neighbor-min converges in DIAMETER rounds,
-        # with the shortcut in ~log2(diameter) (the chains a 100x corpus
-        # grows are exactly what this bounds)
+        # pointer jumping: label <- label(label). Labels are always
+        # vertex ids inside the component, so the hop stays within it
+        # and only accelerates — plain neighbor-min converges in
+        # DIAMETER rounds, with the shortcut in ~log2(diameter) (the
+        # chains a 100x corpus grows are exactly what this bounds)
         lab_map = stepped.select(
             F.col("v").alias("_lv"), F.col("label").alias("_ll")
         )
@@ -865,43 +817,17 @@ def near_dup_components(
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-        done = 0
-        if extend_until_converged:
-            # a converged label table is a fixed point — further rounds
-            # are no-ops — so check after EVERY round and stop at the
-            # first unchanged one (quasi-clique graphs usually converge
-            # in 2 rounds; the fixed `rounds` budget is irrelevant here)
-            prev = labels
-            labels = _one_round(labels, jump=True)
-            done = 1
-            while (
-                done < max_rounds
-                and labels.filter(F.col("_chg")).limit(1).count() > 0
-            ):
-                nxt = _one_round(labels, jump=True)
-                labels.unpersist()  # free the superseded round's blocks
-                labels, prev = nxt, labels
-                done += 1
-            return labels.select(
-                F.col("v").alias("doc_id"), F.col("label").alias("keeper_id")
-            )
-        for _ in range(rounds):
-            nxt = _one_round(labels)
-            if done > 0:
-                labels.unpersist()  # free the superseded round's blocks
-            labels = nxt
+        # a converged label table is a fixed point — further rounds are
+        # no-ops — so check after EVERY round and stop at the first
+        # unchanged one (quasi-clique graphs usually converge in 2)
+        labels = _one_round(labels)
+        done = 1
+        while (
+            done < COMPONENTS_MAX_ROUNDS
+            and labels.filter(F.col("_chg")).limit(1).count() > 0
+        ):
+            labels = _one_round(labels)
             done += 1
-        if labels.filter(F.col("_chg")).limit(1).count() > 0:
-            import warnings
-
-            warnings.warn(
-                f"near_dup_components: labels still changing after "
-                f"{rounds} rounds — a component's diameter exceeds the "
-                f"round budget and it will be SPLIT into several keepers. "
-                f"Pass extend_until_converged=True for exact components.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return labels.select(

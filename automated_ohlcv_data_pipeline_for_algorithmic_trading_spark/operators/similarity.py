@@ -1150,7 +1150,7 @@ def semdedup(
             .filter(F.col("_cos") >= threshold)
             .select(F.col("_ida").alias("doc_a"), F.col("_idb").alias("doc_b"))
         )
-    comp = near_dup_components(pairs, rounds=3, extend_until_converged=True)
+    comp = near_dup_components(pairs)
     return comp.select(
         F.col("doc_id").alias("vec_id"),
         "keeper_id",

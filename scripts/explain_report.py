@@ -93,16 +93,40 @@ BNLJ_ALLOWLIST: dict[str, str] = {
 }
 
 
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as text."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().strip()
+
+
+def plan_tree(plan: str) -> str:
+    """The operator tree of a formatted plan: the lines after
+    ``== Physical Plan ==`` up to the first blank line. It carries no
+    expression or RDD ids, so it compares across sessions."""
+    body = plan.split("== Physical Plan ==\n", 1)[1]
+    return body.split("\n\n", 1)[0].rstrip()
+
+
+def committed_plans(txt: str) -> dict[str, str]:
+    """Per-query plan section of an EXPLAINS.md body."""
+    plans: dict[str, str] = {}
+    for sec in re.split(r"\n## ", txt)[1:]:
+        name, body = sec.split("\n", 1)
+        plans[name.strip()] = body
+    return plans
+
+
 def _census_from_text(txt: str) -> dict[str, int]:
     """Per-query BNLJ occurrence counts from an EXPLAINS.md body (the
     formatted explain mentions the operator in both the tree and the
     detail section, so counts are ~2x the site count — comparisons stay
     within this convention)."""
-    census: dict[str, int] = {}
-    for sec in re.split(r"\n## ", txt)[1:]:
-        name = sec.split("\n", 1)[0].strip()
-        census[name] = sec.count("BroadcastNestedLoopJoin")
-    return census
+    return {
+        n: p.count("BroadcastNestedLoopJoin")
+        for n, p in committed_plans(txt).items()
+    }
 
 
 def _audit(census: dict[str, int], strict_missing: bool) -> list[str]:
@@ -198,13 +222,7 @@ def main() -> None:
     excl_lines = "".join(
         f"- `{n}`: {why}\n" for n, why in sorted(EXCLUDED.items())
     )
-    plans: dict[str, str] = {}
-    for name in headline:
-        df = qs[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plans[name] = buf.getvalue().strip()
+    plans = {name: formatted_plan(qs[name](spark, sf_dir)) for name in headline}
     census = {n: p.count("BroadcastNestedLoopJoin") for n, p in plans.items()}
     errors = _audit(census, strict_missing=True)
     if errors:

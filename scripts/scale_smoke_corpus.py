@@ -153,9 +153,7 @@ def main() -> None:
 
             def curation():
                 comp = near_dup_components(
-                    minhash_near_dup_pairs(docs, threshold=0.95),
-                    rounds=3,
-                    extend_until_converged=True,
+                    minhash_near_dup_pairs(docs, threshold=0.95)
                 )
                 q = quality_score(corpus).select("doc_id", "quality_score")
                 cont = decontaminate(corpus, bench, ngram=3).select(

@@ -186,3 +186,44 @@ def test_keltner_windows_share_one_exchange(spark, sf_dir):
     plan = physical(df)
     n_hash_exchanges = plan.count("Exchange hashpartitioning")
     assert n_hash_exchanges <= 2, plan[:4000]
+
+
+#: Queries whose committed EXPLAINS.md tree must match the live plan: the
+#: rank callers and the dedup-decision callers.
+EXPLAINS_SAMPLE = [
+    "d_quality_fusion",
+    "e_gini",
+    "e_pareto_share",
+    "d_zipf_slope",
+    "d_vocab_coverage",
+    "d_dup_components",
+    "d_curation_pipeline",
+    "emb_semdedup",
+]
+
+
+def test_explains_artifact_matches_live_plans(spark):
+    """EXPLAINS.md is regenerated by hand, so it goes stale silently when
+    an operator changes its plan. For a sample of queries, the committed
+    operator tree must equal the live one, built against the data the
+    artifact names in its header."""
+    import importlib
+    import sys
+    from pathlib import Path
+
+    import __spark_entry__ as E
+
+    repo = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(repo / "scripts"))
+    er = importlib.import_module("explain_report")
+    txt = (repo / "EXPLAINS.md").read_text()
+    sf_dir = re.search(r"Generated against `([^`]+)`", txt).group(1)
+    committed = er.committed_plans(txt)
+    qs = E.queries()
+    stale = [
+        name
+        for name in EXPLAINS_SAMPLE
+        if er.plan_tree(committed[name])
+        != er.plan_tree(er.formatted_plan(qs[name](spark, sf_dir)))
+    ]
+    assert not stale, f"EXPLAINS.md is stale for {stale}; regenerate it"

@@ -247,9 +247,9 @@ def test_redact_pii_masks_and_counts(spark):
 
 
 def test_near_dup_components_keeper_selection(spark):
-    """Min-label propagation: cliques resolve in one round; a chain
-    resolves min within `rounds` hops (fixed-round semantics are exactly
-    what the unrolled SQL oracle replays)."""
+    """Every vertex's keeper is the minimum id of its connected
+    component, however many hops away: a triangle and a 5-vertex chain
+    both resolve fully."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         near_dup_components,
     )
@@ -259,16 +259,8 @@ def test_near_dup_components_keeper_selection(spark):
         [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (13, 14)],
         "doc_a long, doc_b long",
     )
-    out = {r["doc_id"]: r["keeper_id"] for r in near_dup_components(pairs, rounds=3).collect()}
-    assert out[1] == out[2] == out[3] == 1
-    # 3 rounds reach 3 hops: 13 is 3 hops from 10 -> 10; 14 is 4 hops ->
-    # best reachable is 10's label after round 2 propagated to 13... the
-    # fixed-round fixpoint: 14 sees min within 3 hops = 11
-    assert out[10] == out[11] == out[12] == out[13] == 10
-    assert out[14] == 11
-    # one more round converges the chain fully
-    out4 = {r["doc_id"]: r["keeper_id"] for r in near_dup_components(pairs, rounds=4).collect()}
-    assert all(out4[v] == 10 for v in (10, 11, 12, 13, 14))
+    out = {r["doc_id"]: r["keeper_id"] for r in near_dup_components(pairs).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 14: 10}
 
 
 def test_embedding_neardup_lsh_path_subset_of_exact(spark, sf_dir):
@@ -320,50 +312,9 @@ def test_knn_brute_force_and_lsh_recall(spark, sf_dir):
     assert recall >= 0.5, f"LSH recall collapsed: {recall}"
 
 
-def test_near_dup_components_convergence_guard(spark):
-    """A chain whose diameter exceeds the round budget: fixed-round mode
-    warns that components will split; extend_until_converged iterates to
-    the true fixed point (bounded by max_rounds)."""
-    import warnings as w
-
-    from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
-        near_dup_components,
-    )
-
-    # chain 1-2-3-4-5-6-7-8: diameter 7, far beyond rounds=3
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
-    )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        out = {
-            r["doc_id"]: r["keeper_id"]
-            for r in near_dup_components(pairs, rounds=3).collect()
-        }
-    assert any("still changing" in str(c.message) for c in caught)
-    assert len(set(out.values())) > 1  # the split the warning promises
-
-    out_full = {
-        r["doc_id"]: r["keeper_id"]
-        for r in near_dup_components(
-            pairs, rounds=3, extend_until_converged=True
-        ).collect()
-    }
-    assert all(out_full[v] == 1 for v in range(1, 9))
-
-    # a converged graph must NOT warn in fixed-round mode
-    clique = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "doc_a long, doc_b long"
-    )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        near_dup_components(clique, rounds=3).collect()
-    assert not any("still changing" in str(c.message) for c in caught)
-
-
 def test_union_find_fast_path_matches_distributed_loop(spark):
-    """Converged mode's driver union-find fast path must reach the
-    IDENTICAL fixed point as the distributed pointer-jumping loop
+    """The driver union-find fast path must reach the IDENTICAL fixed
+    point as the distributed pointer-jumping loop
     (forced via small_graph_max_edges=0) on an awkward graph: long
     chain + clique + isolated edge, with edges in arbitrary order."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
@@ -378,15 +329,11 @@ def test_union_find_fast_path_matches_distributed_loop(spark):
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     fast = {
         r["doc_id"]: r["keeper_id"]
-        for r in near_dup_components(
-            pairs, extend_until_converged=True
-        ).collect()
+        for r in near_dup_components(pairs).collect()
     }
     dist = {
         r["doc_id"]: r["keeper_id"]
-        for r in near_dup_components(
-            pairs, extend_until_converged=True, small_graph_max_edges=0
-        ).collect()
+        for r in near_dup_components(pairs, small_graph_max_edges=0).collect()
     }
     assert fast == dist
     assert fast[28] == 20 and fast[101] == 101 and fast[7] == 3
@@ -570,7 +517,7 @@ def test_bpe_token_counts_apply_side(spark):
 
 
 def test_near_dup_components_string_ids_fast_path(spark):
-    """The converged-mode union-find fast path must preserve the INPUT
+    """The union-find fast path must preserve the INPUT
     id type (string doc ids are first-class), not hardcode long."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         near_dup_components,
@@ -580,7 +527,7 @@ def test_near_dup_components_string_ids_fast_path(spark):
         [("a", "b"), ("b", "c"), ("x", "y")],
         "doc_a string, doc_b string",
     )
-    out_df = near_dup_components(pairs, extend_until_converged=True)
+    out_df = near_dup_components(pairs)
     assert dict(out_df.dtypes) == {"doc_id": "string", "keeper_id": "string"}
     out = {r["doc_id"]: r["keeper_id"] for r in out_df.collect()}
     assert out == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
@@ -599,9 +546,7 @@ def test_near_dup_components_null_ids_skip_fast_path(spark):
     )
     out = {
         r["doc_id"]: r["keeper_id"]
-        for r in near_dup_components(
-            pairs, extend_until_converged=True
-        ).collect()
+        for r in near_dup_components(pairs).collect()
         if r["doc_id"] is not None
     }
     assert out[1] == 1 and out[2] == 1 and out[3] == 1
@@ -611,7 +556,7 @@ def test_near_dup_components_null_ids_skip_fast_path(spark):
 
 @pytest.mark.parametrize("n_parts,max_jobs", [(4, 3), (32, 5)])
 def test_near_dup_components_fast_path_probes_once(spark, n_parts, max_jobs):
-    """The converged fast path reads its checkpointed edges with ONE
+    """The fast path reads its checkpointed edges with ONE
     bounded ``limit(max + 1).collect()`` (Spark's incremental take: 1 +
     ~log4(partitions) jobs) instead of a count, a NULL-id probe and a
     collect. With the pair checkpoint, the call runs 3 jobs at 4 input
@@ -629,7 +574,7 @@ def test_near_dup_components_fast_path_probes_once(spark, n_parts, max_jobs):
     )
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     before = sched.numTotalJobs()
-    out = near_dup_components(pairs, extend_until_converged=True)
+    out = near_dup_components(pairs)
     assert sched.numTotalJobs() - before <= max_jobs
     got = {r["doc_id"]: r["keeper_id"] for r in out.collect()}
     assert got == {v: v - v % 4 for v in range(400)}
@@ -736,12 +681,23 @@ class TestDupComponentsLifecycle:
         assert a != b  # threshold is part of the key
 
 
-def test_minhash_dup_decisions_matches_member_level_fixed_point(spark, sf_dir):
+#: ``minhash_dup_decisions`` edge bounds: the default takes the driver
+#: union-find, 0 forces the rep graph through the distributed loop.
+DECISION_BOUNDS = pytest.mark.parametrize(
+    "bound", [{}, {"small_graph_max_edges": 0}], ids=["default", "distributed"]
+)
+
+
+@DECISION_BOUNDS
+def test_minhash_dup_decisions_matches_member_level_fixed_point(
+    spark, sf_dir, bound
+):
     """The rep-level decision operator must reproduce the EXACT converged
     fixed point of the member-level path (expansion + components) — same
     vertex set, same keepers — on a corpus that exercises every vertex
     class: an exact-dup clique, cross-group near-dups, duplicated EMPTY
-    docs (never vertices), and unique singletons (never vertices)."""
+    docs (never vertices), and unique singletons (never vertices). Both
+    components paths of the rep graph are checked."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         minhash_dup_decisions,
         minhash_near_dup_pairs,
@@ -770,13 +726,14 @@ def test_minhash_dup_decisions_matches_member_level_fixed_point(spark, sf_dir):
     for threshold in (0.8, 0.95):
         got = sorted(
             tuple(r)
-            for r in minhash_dup_decisions(docs, threshold=threshold).collect()
+            for r in minhash_dup_decisions(
+                docs, threshold=threshold, **bound
+            ).collect()
         )
         want = sorted(
             tuple(r)
             for r in near_dup_components(
-                minhash_near_dup_pairs(docs, threshold=threshold),
-                extend_until_converged=True,
+                minhash_near_dup_pairs(docs, threshold=threshold)
             ).collect()
         )
         assert got == want
@@ -793,13 +750,13 @@ def test_minhash_dup_decisions_matches_member_level_fixed_point(spark, sf_dir):
     # and on the real fixture corpus the two paths agree exactly
     corpus = load_table(spark, sf_dir, "documents")
     got = sorted(
-        tuple(r) for r in minhash_dup_decisions(corpus, threshold=0.95).collect()
+        tuple(r)
+        for r in minhash_dup_decisions(corpus, threshold=0.95, **bound).collect()
     )
     want = sorted(
         tuple(r)
         for r in near_dup_components(
-            minhash_near_dup_pairs(corpus, threshold=0.95),
-            extend_until_converged=True,
+            minhash_near_dup_pairs(corpus, threshold=0.95)
         ).collect()
     )
     assert got == want
@@ -835,12 +792,13 @@ def test_bpe_driver_fit_matches_distributed_loop(spark, monkeypatch):
     assert fast == slow
 
 
-def test_minhash_dup_decisions_null_id_matches_member_level(spark):
+@DECISION_BOUNDS
+def test_minhash_dup_decisions_null_id_matches_member_level(spark, bound):
     """A NULL doc_id must follow the member-level NULL discipline on the
-    rep-level fast path (round-12 ADVICE): it never emits a decision row
-    (doc_a < doc_b drops NULL pairs) and never counts as a pairing
-    partner — a 2-member group whose second member has a NULL id behaves
-    like a singleton."""
+    rep-level path, under either components path: it never emits a
+    decision row (doc_a < doc_b drops NULL pairs) and never counts as a
+    pairing partner — a 2-member group whose second member has a NULL id
+    behaves like a singleton."""
     from automated_ohlcv_data_pipeline_for_algorithmic_trading_spark.operators.dedup_similarity import (
         minhash_dup_decisions,
         minhash_near_dup_pairs,
@@ -861,13 +819,14 @@ def test_minhash_dup_decisions_null_id_matches_member_level(spark):
     for threshold in (0.8, 0.95):
         got = sorted(
             (r["doc_id"], r["keeper_id"])
-            for r in minhash_dup_decisions(docs, threshold=threshold).collect()
+            for r in minhash_dup_decisions(
+                docs, threshold=threshold, **bound
+            ).collect()
         )
         want = sorted(
             (r["doc_id"], r["keeper_id"])
             for r in near_dup_components(
-                minhash_near_dup_pairs(docs, threshold=threshold),
-                extend_until_converged=True,
+                minhash_near_dup_pairs(docs, threshold=threshold)
             ).collect()
         )
         assert got == want
